@@ -305,28 +305,83 @@ def encode_png(img: np.ndarray) -> bytes:
     )
 
 
+def _decode_gif(data: bytes) -> np.ndarray:
+    from .gif import decode_gif
+
+    return decode_gif(data)[0]
+
+
+def _decode_jpeg(data: bytes) -> np.ndarray:
+    from .jpeg import decode_jpeg
+
+    return decode_jpeg(data)
+
+
+def _decode_webp(data: bytes) -> np.ndarray:
+    from .webp import decode_webp
+
+    return decode_webp(data)
+
+
+# Every payload format the engine recognizes, as (name, ((offset,
+# magic), ...), decoder or None): a payload is that format when every
+# (offset, magic) pair matches. The only place in the package that knows
+# magic bytes; everything else dispatches on ``sniff_format``'s name.
+# HTML has no fixed magic: it is the fallback for a leading '<' after an
+# optional UTF-8 BOM and whitespace, which no binary magic starts with.
+_FORMATS = (
+    ("rawi", ((0, RAWI_MAGIC),), decode_rawi),
+    ("rlei", ((0, RLEI_MAGIC),), decode_rlei),
+    ("png", ((0, _PNG_SIG),), decode_png),
+    ("jpeg", ((0, b"\xff\xd8"),), _decode_jpeg),
+    ("webp", ((0, b"RIFF"), (8, b"WEBP")), _decode_webp),
+    ("gif", ((0, b"GIF87a"),), _decode_gif),
+    ("gif", ((0, b"GIF89a"),), _decode_gif),
+    ("pdf", ((0, b"%PDF-"),), None),
+    ("wav", ((0, b"RIFF"), (8, b"WAVE")), None),
+    ("avi", ((0, b"RIFF"), (8, b"AVI ")), None),
+)
+_DECODERS = {name: dec for name, _, dec in _FORMATS if dec is not None}
+
+
+def sniff_format(data: bytes) -> str:
+    """Payload format name from its leading bytes: one of the names in
+    ``_FORMATS``, ``"html"``, or ``"unknown"``."""
+    for name, marks, _ in _FORMATS:
+        if all(data[at : at + len(magic)] == magic for at, magic in marks):
+            return name
+    head = data[:64].removeprefix(b"\xef\xbb\xbf")
+    return "html" if head.lstrip(b" \t\r\n").startswith(b"<") else "unknown"
+
+
 def decode_image(data: bytes) -> np.ndarray:
-    """Dispatch on magic bytes -> HWC uint8 array."""
-    if data[:4] == RAWI_MAGIC:
-        return decode_rawi(data)
-    if data[:4] == RLEI_MAGIC:
-        return decode_rlei(data)
-    if data[:8] == _PNG_SIG:
-        return decode_png(data)
-    if data[:2] == b"\xff\xd8":
-        from .jpeg import decode_jpeg
+    """Dispatch on magic bytes -> HWC uint8 array with 1, 3 or 4 channels.
 
-        return decode_jpeg(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        from .webp import decode_webp
-
-        return decode_webp(data)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gif
-
-        grey, _delay = decode_gif(data)
-        return grey[:, :, None]
-    raise UnsupportedImageError(
-        "unsupported image format (RAWI, RLEI, PNG, baseline/progressive "
-        "JPEG, lossless + lossy WebP, and GIF supported)"
-    )
+    Any other decoder output, and any error a decoder lets slip on
+    corrupt input, raises ``UnsupportedImageError``: callers quarantine
+    one typed error per bad payload instead of a mis-shaped array that
+    fails a whole stacked batch downstream."""
+    fmt = sniff_format(data)
+    decoder = _DECODERS.get(fmt)
+    if decoder is None:
+        raise UnsupportedImageError(
+            f"unsupported image format {fmt!r} (RAWI, RLEI, PNG, baseline/"
+            "progressive JPEG, lossless + lossy WebP, and GIF supported)"
+        )
+    try:
+        img = decoder(data)
+    except UnsupportedImageError:
+        raise
+    except (
+        ArithmeticError, IndexError, KeyError, MemoryError, ValueError,
+        struct.error, zlib.error,
+    ) as exc:
+        raise UnsupportedImageError(f"corrupt {fmt} payload ({exc!r})") from exc
+    if img.ndim == 2:
+        img = img[:, :, None]
+    if img.dtype != np.uint8 or img.ndim != 3 or img.shape[2] not in (1, 3, 4):
+        raise UnsupportedImageError(
+            f"{fmt} decoded to {img.dtype} {img.shape}, not HWC uint8 "
+            "with 1, 3 or 4 channels"
+        )
+    return img

@@ -6,10 +6,10 @@ the production shape of a real media column at 100 TB, where a
 per-kind scan (filter to images, scan again for audio, again for
 video) would read the corpus three times.
 
-Router rule (sniffed, never trusted from a column):
-  \\x89PNG...        -> image  (ops/imagemeta chunk walk, pixel-cold)
-  RIFF....WAVE      -> audio  (ops/audio fmt/data walk)
-  RIFF....AVI\\x20   -> video  (ops/video nested-LIST walk)
+Router rule (``codec.sniff_format``, never trusted from a column):
+  png  -> image  (ops/imagemeta chunk walk, pixel-cold)
+  wav  -> audio  (ops/audio fmt/data walk)
+  avi  -> video  (ops/video nested-LIST walk)
 
 Unified row: (doc_id, media_kind, width, height, units, duration_ms,
 caption) — units is n_chunks / n_samples / n_frames per kind; fields
@@ -19,7 +19,7 @@ dtype-stable across engines.
 
 Scale: payloads materialize once; the router is a single Arrow-batched
 ``mapInPandas`` — exactly one scan of the binary column, the dispatch
-cost is a two-byte-prefix check per row.
+cost is a magic-byte check per row.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from typing import Iterator
 import pandas as pd
 
 from . import load_tables
+from ..codec import sniff_format
 from ..matcache import materialize_once
 from .audio import _rate, _samples, decode_wav, encode_wav
 from .imagemeta import _png_with_text, extract_png_text
@@ -38,6 +39,7 @@ ROUTER_SCHEMA = (
     "doc_id bigint, media_kind string, width int, height int, "
     "units bigint, duration_ms bigint, caption string"
 )
+_ROUTER_COLUMNS = [f.split()[0] for f in ROUTER_SCHEMA.split(", ")]
 
 
 def _payload(doc_id: int) -> bytes:
@@ -51,14 +53,15 @@ def _payload(doc_id: int) -> bytes:
 
 def route_media(buf: bytes):
     """(media_kind, width, height, units, duration_ms, caption) by
-    magic-byte dispatch."""
-    if buf[:8] == b"\x89PNG\r\n\x1a\n":
+    ``codec.sniff_format`` dispatch."""
+    fmt = sniff_format(buf)
+    if fmt == "png":
         w, h, n, texts = extract_png_text(buf)
         return ("image", w, h, n, 0, texts.get("Description", ""))
-    if buf[:4] == b"RIFF" and buf[8:12] == b"WAVE":
+    if fmt == "wav":
         rate, s = decode_wav(buf)
         return ("audio", -1, -1, len(s), (1000 * len(s)) // rate, "")
-    if buf[:4] == b"RIFF" and buf[8:12] == b"AVI ":
+    if fmt == "avi":
         w, h, usec, frames = decode_avi(buf)
         return (
             "video",
@@ -69,6 +72,15 @@ def route_media(buf: bytes):
             "",
         )
     raise ValueError("unrecognized media payload")
+
+
+def _route_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The router's mapInPandas body: (doc_id, payload) -> ROUTER_SCHEMA."""
+    for pdf in batches:
+        out = []
+        for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
+            out.append((int(doc_id),) + route_media(bytes(buf)))
+        yield pd.DataFrame(out, columns=_ROUTER_COLUMNS)
 
 
 def _mixed_payloads(spark, sf_dir: str):
@@ -92,27 +104,8 @@ def _mixed_payloads(spark, sf_dir: str):
 def media_route_meta(spark, sf_dir: str):
     payloads = _mixed_payloads(spark, sf_dir)
     cores = int(spark.sparkContext.defaultParallelism)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                out.append((int(doc_id),) + route_media(bytes(buf)))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "media_kind",
-                    "width",
-                    "height",
-                    "units",
-                    "duration_ms",
-                    "caption",
-                ],
-            )
-
     return payloads.repartition(cores).mapInPandas(
-        extract, schema=ROUTER_SCHEMA
+        _route_batches, schema=ROUTER_SCHEMA
     )
 
 
@@ -170,27 +163,8 @@ def stream_media_route(spark, sf_dir: str):
             spark.readStream.schema("doc_id bigint, payload binary")
             .parquet(pay_dir)
         )
-
-        def extract(batches):
-            for pdf in batches:
-                out = []
-                for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                    out.append((int(doc_id),) + route_media(bytes(buf)))
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "doc_id",
-                        "media_kind",
-                        "width",
-                        "height",
-                        "units",
-                        "duration_ms",
-                        "caption",
-                    ],
-                )
-
         q = (
-            stream.mapInPandas(extract, schema=ROUTER_SCHEMA)
+            stream.mapInPandas(_route_batches, schema=ROUTER_SCHEMA)
             .writeStream.format("memory")
             .queryName(name)
             .option("checkpointLocation", f"{base}/ckpt")

@@ -7,12 +7,13 @@ Plan shape (SURVEY.md §3.4, mandated by the north rule):
       -> explode(spans)                      [UNNEST; unit of work = span]
       -> filter kind in (image, pdf, html)   [text spans never touch Python]
       -> left-anti join committed ledger     [resume pruning]
-      -> join media payloads                 [broadcast when small]
-      -> repartition(hash(doc_id, offset))   [skew: schedule ~1 image/unit,
-                                              not 1 document/unit]
+      -> distinct media_ref + join payloads  [broadcast when small]
+      -> repartition(hash(media_ref))        [skew: schedule one unique
+                                              image/unit, not 1 document]
       -> mapInPandas(fused OCR UDF)          [decode+detect+layout+recognize
                                               per Arrow batch; detection is
                                               stacked into one NCHW run]
+      -> join results back to spans          [fan-out, broadcast when small]
       -> join back + groupBy(doc_id)         [reweave]
       -> array_sort by offset -> spans       [order restored by offset]
 
@@ -30,10 +31,10 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .codec import decode_image
+from .codec import decode_image, sniff_format
 from .engine import OcrEngine, OcrEngineParams
 from .models import FakeDetectionModel, FakeRecognitionModel, fake_alphabet
 
@@ -43,21 +44,11 @@ OCR_RESULT_SCHEMA = "doc_id string, offset int, ocr_text string, n_words int, n_
 SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 
 # Media span kinds that flow through the extraction UDF. Dispatch is by
-# payload magic bytes inside the kernel — a 'pdf' span whose payload is
+# ``codec.sniff_format`` inside the kernel — a 'pdf' span whose payload is
 # really an image still OCRs, and vice versa — so the kinds only gate
 # which spans become work units.
 MEDIA_KINDS = ("image", "pdf", "html")
 
-
-def _looks_like_html(payload: bytes) -> bool:
-    """Payload sniff for the kernel dispatch: HTML documents start with
-    '<' (after optional whitespace/BOM); no supported binary image or
-    PDF format does (PNG \\x89, JPEG \\xff\\xd8, RIFF 'R', RAWI/RLEI
-    magics, '%PDF-')."""
-    head = payload[:64]
-    if head.startswith(b"\xef\xbb\xbf"):
-        head = head[3:]
-    return head.lstrip(b" \t\r\n").startswith(b"<")
 
 # ----------------------------------------------------------------- engine
 
@@ -113,21 +104,22 @@ def extract_payload_batch(
     errors = [None] * n
     greys = [None] * n
     # Decode + normalize the whole Arrow batch first. Payloads
-    # dispatch on magic bytes: born-digital PDFs are parsed
+    # dispatch on their sniffed format: born-digital PDFs are parsed
     # directly (no rasterize/OCR), HTML documents get the
     # DOM-heuristic boilerplate strip, everything else goes
     # through the image decoders into the OCR stages below.
     for i in range(n):
         try:
             payload = bytes(payloads[i])  # None/bad cells -> error row below
-            if payload.startswith(b"%PDF-"):
+            fmt = sniff_format(payload)
+            if fmt == "pdf":
                 from .pdf import extract_pdf_text
 
                 shown = extract_pdf_text(payload)
                 texts[i] = "\n".join(shown)
                 n_lines[i] = sum(1 for s in shown if s)
                 n_words[i] = sum(len(s.split()) for s in shown)
-            elif _looks_like_html(payload):
+            elif fmt == "html":
                 from .dom import keep_block, parse_html, text_blocks
 
                 kept = [
@@ -238,6 +230,10 @@ def _parse_byte_size(value: str) -> int | None:
 # booleans (bounded); a snapshot change produces a different analyzed
 # plan, hence a fresh entry. This caches a PLANNING decision, never
 # query results.
+# Both this cache and the counter below are read and updated without a
+# lock: they assume a single driver thread builds pipelines. Concurrent
+# driver threads may each run the size aggregate once and interleave
+# counter updates (harmless for the cache's booleans).
 _BROADCAST_DECISION_CACHE: dict[tuple, bool] = {}
 _BROADCAST_AGGS_RUN = 0  # instrumentation for the plan test
 
@@ -283,69 +279,58 @@ def ocr_image_spans(
     media: DataFrame,
     engine_conf: dict,
     partitions: int | None = None,
-    broadcast_media: bool | None = None,
-    dedup_media: bool = True,
 ) -> DataFrame:
     """Run OCR over the image spans. Returns
     (doc_id, offset, ocr_text, n_words, n_lines, error).
 
-    With ``dedup_media`` (default), each distinct ``media_ref`` is OCR'd
-    exactly once and the result is joined back to the referencing spans —
-    at corpus scale the same image is commonly referenced by many
-    documents, and model inference dwarfs the join. The unit of scheduled
-    work becomes one unique image, which also flattens doc-level skew.
+    Each distinct ``media_ref`` is OCR'd exactly once and the result is
+    joined back to the referencing spans — at corpus scale the same
+    image is commonly referenced by many documents, and model inference
+    dwarfs the join. The unit of scheduled work becomes one unique
+    image, which also flattens doc-level skew.
 
-    ``broadcast_media=None`` (default) measures the media payload and
-    broadcasts only when it fits the session's broadcast threshold —
-    a corpus-scale media table falls back to the hash join + skew-salted
-    repartition automatically instead of relying on a caller flag.
+    The media payload is measured (``_media_fits_broadcast``) and
+    broadcast only when it fits the session's broadcast threshold — a
+    corpus-scale media table falls back to the hash join automatically.
     """
     work = spans.filter(F.col("kind").isin(*MEDIA_KINDS)).select(
         "doc_id", "offset", "media_ref"
     )
     m = media.select("media_ref", "bytes")
-    if broadcast_media is None:
-        broadcast_media = _media_fits_broadcast(m)
+    broadcast_media = _media_fits_broadcast(m)
     if broadcast_media:
         m = F.broadcast(m)
-    spark = work.sparkSession
     if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
+        partitions = work.sparkSession.sparkContext.defaultParallelism
 
-    if dedup_media:
-        uniq = (
-            work.select("media_ref")
-            .distinct()
-            .join(m, "media_ref", "left")
-            # Skew break: spread unique images uniformly; the OCR UDF keys
-            # on media_ref here and results fan back out via the join.
-            .repartition(partitions, F.xxhash64("media_ref"))
-            .withColumnRenamed("media_ref", "doc_id")  # reuse UDF schema slot
-            .withColumn("offset", F.lit(0))
-        )
-        per_media = uniq.mapInPandas(make_ocr_udf(engine_conf), schema=OCR_RESULT_SCHEMA)
-        per_media = per_media.select(
-            F.col("doc_id").alias("media_ref"),
-            "ocr_text",
-            "n_words",
-            "n_lines",
-            "error",
-        )
-        # Fan the per-unique-image results back out to the referencing
-        # spans. The result rows are strictly smaller than the media
-        # rows (text + counts, no pixels), so whenever the media side
-        # was broadcastable the results are too — broadcast them and the
-        # big span table never shuffles for this join.
-        if broadcast_media:
-            per_media = F.broadcast(per_media)
-        return work.join(per_media, "media_ref", "left").select(
-            "doc_id", "offset", "ocr_text", "n_words", "n_lines", "error"
-        )
-
-    work = work.join(m, "media_ref", "left").select("doc_id", "offset", "bytes")
-    # Skew break: spread one doc's many images across all partitions.
-    work = work.repartition(partitions, F.xxhash64("doc_id", "offset"))
-    return work.mapInPandas(make_ocr_udf(engine_conf), schema=OCR_RESULT_SCHEMA)
+    uniq = (
+        work.select("media_ref")
+        .distinct()
+        .join(m, "media_ref", "left")
+        # Skew break: spread unique images uniformly; the OCR UDF keys
+        # on media_ref here and results fan back out via the join.
+        .repartition(partitions, F.xxhash64("media_ref"))
+        .withColumnRenamed("media_ref", "doc_id")  # reuse UDF schema slot
+        .withColumn("offset", F.lit(0))
+    )
+    per_media = uniq.mapInPandas(make_ocr_udf(engine_conf), schema=OCR_RESULT_SCHEMA)
+    per_media = per_media.select(
+        F.col("doc_id").alias("media_ref"),
+        "ocr_text",
+        "n_words",
+        "n_lines",
+        "error",
+    )
+    # Fan the per-unique-image results back out to the referencing
+    # spans. The result rows are strictly smaller than the media rows
+    # (text + counts, no pixels), so whenever the media side was
+    # broadcastable the results are too — broadcast them and the big
+    # span table never shuffles for this join.
+    if broadcast_media:
+        per_media = F.broadcast(per_media)
+    return work.join(per_media, "media_ref", "left").select(
+        "doc_id", "offset", "ocr_text", "n_words", "n_lines", "error"
+    )
 
 
 def reweave(spans: DataFrame, ocr_results: DataFrame) -> DataFrame:
@@ -389,16 +374,13 @@ def ocr_documents(
     media: DataFrame,
     engine_conf: dict | None = None,
     partitions: int | None = None,
-    broadcast_media: bool | None = None,
 ) -> DataFrame:
     """Full pipeline: documents + media -> documents with image spans
-    OCR'd, span order restored by offset. ``broadcast_media=None``
-    sizes the media payload and picks the fan-out strategy itself."""
+    OCR'd, span order restored by offset. The media payload is sized to
+    pick the fan-out strategy (see ``ocr_image_spans``)."""
     engine_conf = engine_conf or {"kind": "fake"}
     spans = explode_spans(documents)
-    results = ocr_image_spans(
-        spans, media, engine_conf, partitions=partitions, broadcast_media=broadcast_media
-    )
+    results = ocr_image_spans(spans, media, engine_conf, partitions=partitions)
     return reweave(spans, results)
 
 

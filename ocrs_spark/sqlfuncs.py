@@ -36,28 +36,6 @@ IMAGE_META_TYPE = (
 )
 
 
-def _sniff_format(payload: bytes) -> str:
-    """Container format from magic bytes (the pipeline's own dispatch
-    order: PDF and HTML short-circuit before the image decoders)."""
-    if payload.startswith(b"%PDF-"):
-        return "pdf"
-    if payload.startswith(b"\x89PNG\r\n\x1a\n"):
-        return "png"
-    if payload.startswith(b"\xff\xd8"):
-        return "jpeg"
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        return "webp"
-    if payload.startswith(b"RAWI"):
-        return "rawi"
-    if payload.startswith(b"RLEI"):
-        return "rlei"
-    from .pipeline import _looks_like_html
-
-    if _looks_like_html(payload):
-        return "html"
-    return "unknown"
-
-
 def register_sql_functions(spark, engine_conf: dict | None = None) -> list[str]:
     """Register the kernel UDFs on ``spark``; returns the names.
 
@@ -91,19 +69,17 @@ def register_sql_functions(spark, engine_conf: dict | None = None) -> list[str]:
 
     @pandas_udf(IMAGE_META_TYPE)
     def image_meta(payloads: pd.Series) -> pd.DataFrame:
-        from .codec import decode_image
+        from .codec import decode_image, sniff_format
 
         out = {"format": [], "width": [], "height": [], "channels": [], "error": []}
         for p in payloads:
             payload = bytes(p) if p is not None else b""
-            fmt = _sniff_format(payload)
+            fmt = sniff_format(payload)
             w = h = c = None
             err = None
             if fmt not in ("pdf", "html"):
                 try:
-                    img = decode_image(payload)
-                    h, w = int(img.shape[0]), int(img.shape[1])
-                    c = int(img.shape[2]) if img.ndim == 3 else 1
+                    h, w, c = map(int, decode_image(payload).shape)
                 except Exception as exc:
                     err = str(exc)
             out["format"].append(fmt)

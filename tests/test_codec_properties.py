@@ -1,13 +1,26 @@
 """Property-based codec tests (hypothesis): lossless codecs must
-round-trip EXACTLY for arbitrary images, and the progressive JPEG
+round-trip EXACTLY for arbitrary images, the progressive JPEG
 encoding must always decode identically to the baseline encoding of
-the same image (they share quantized coefficients by construction)."""
+the same image (they share quantized coefficients by construction),
+and the ``decode_image`` dispatcher must answer any bytes with either
+an HWC uint8 image or a typed ``UnsupportedImageError``."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
+from ocrs_spark.codec import (
+    _FORMATS,
+    UnsupportedImageError,
+    decode_image,
+    encode_png,
+    encode_rawi,
+    encode_rlei,
+)
+from ocrs_spark.gif import encode_gif
 from ocrs_spark.jpeg import decode_jpeg, encode_jpeg, encode_jpeg_progressive
 from ocrs_spark.webp import decode_webp, encode_webp
+
+from .util import colour_gif
 
 
 @st.composite
@@ -66,3 +79,54 @@ def test_vp8_lossy_roundtrip_bounded(img, qindex):
     assert np.abs(y.astype(int) - ys.astype(int)).max() <= bound
     assert np.abs(u.astype(int) - us.astype(int)).max() <= bound
     assert np.abs(v.astype(int) - vs.astype(int)).max() <= bound
+
+
+def _valid_payloads() -> list[bytes]:
+    """One small valid stream per decoder, colour-palette GIF included."""
+    rng = np.random.default_rng(5)
+    rgb = rng.integers(0, 256, (9, 14, 3), np.uint8)
+    grey = rng.integers(0, 256, (9, 14), np.uint8)
+    return [
+        encode_rawi(rgb),
+        encode_rlei(rgb),
+        encode_png(rgb),
+        encode_png(grey),
+        encode_jpeg(rgb),
+        encode_jpeg_progressive(rgb),
+        encode_webp(rgb),
+        encode_gif(grey),
+        colour_gif(grey),
+    ]
+
+
+_VALID = _valid_payloads()
+
+
+@st.composite
+def payloads(draw):
+    """Arbitrary bytes; a known magic followed by arbitrary bytes; or a
+    valid stream with a few bytes overwritten and maybe truncated."""
+    kind = draw(st.sampled_from(["bytes", "magic", "mutated"]))
+    if kind == "bytes":
+        return draw(st.binary(max_size=256))
+    if kind == "magic":
+        _, marks, _ = draw(st.sampled_from(_FORMATS))
+        head = bytearray(draw(st.binary(min_size=12, max_size=12)))
+        for at, magic in marks:
+            head[at : at + len(magic)] = magic
+        end = max(at + len(magic) for at, magic in marks)
+        return bytes(head[:end]) + draw(st.binary(max_size=256))
+    data = bytearray(draw(st.sampled_from(_VALID)))
+    for _ in range(draw(st.integers(1, 5))):
+        data[draw(st.integers(0, len(data) - 1))] = draw(st.integers(0, 255))
+    return bytes(data[: draw(st.integers(1, len(data)))])
+
+
+@settings(max_examples=300, deadline=None)
+@given(payloads())
+def test_decode_image_gives_hwc_or_typed_error(data):
+    try:
+        img = decode_image(data)
+    except UnsupportedImageError:
+        return
+    assert img.dtype == np.uint8 and img.ndim == 3 and img.shape[2] in (1, 3, 4)

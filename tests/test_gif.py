@@ -15,6 +15,8 @@ import pytest
 from ocrs_spark.codec import decode_image
 from ocrs_spark.gif import GifError, decode_gif, encode_gif
 
+from .util import colour_gif
+
 
 def _lzw_compress(min_code_size: int, pixels: bytes) -> bytes:
     """Reference dictionary LZW (the spec's actual algorithm), packed
@@ -117,6 +119,9 @@ def test_dispatcher_and_errors():
     img = np.full((5, 9), 200, np.uint8)
     arr = decode_image(encode_gif(img))
     assert arr.shape == (5, 9, 1) and (arr == 200).all()
+    rgb = decode_image(colour_gif(img))
+    assert rgb.shape == (5, 9, 3) and rgb.dtype == np.uint8
+    assert (rgb == [200, 55, (200 * 3) & 0xFF]).all()
     with pytest.raises(GifError):
         decode_gif(b"GIF89a" + b"\x00" * 4)  # truncated header
     buf = bytearray(encode_gif(img))
@@ -159,11 +164,7 @@ def test_color_palette_expands_rgb():
     """A non-greyscale palette decodes to HxWx3 RGB (matching the PNG
     palette path) instead of silently returning the red channel."""
     img = np.arange(20, dtype=np.uint8).reshape(4, 5)
-    buf = bytearray(encode_gif(img))
-    # Patch the 256-entry GCT (offset 13) to a color palette.
-    for i in range(256):
-        buf[13 + 3 * i : 13 + 3 * i + 3] = bytes([i, 255 - i, (i * 3) & 0xFF])
-    out, _ = decode_gif(bytes(buf))
+    out, _ = decode_gif(colour_gif(img))
     assert out.shape == (4, 5, 3)
     flat = img.ravel()
     assert np.array_equal(out.reshape(-1, 3)[:, 0], flat)
@@ -179,3 +180,20 @@ def test_truncated_gif_raises_giferror():
     for cut in (_DESC_AT + 5, _DESC_AT + 12, len(full) - 6, 14):
         with pytest.raises(GifError):
             decode_gif(full[:cut])
+
+
+def test_colour_gif_in_extraction_batch():
+    """A colour-palette GIF among good PNGs in one extraction batch: the
+    GIF decodes to HWC RGB, so the stacked detection input stays
+    well-shaped and every row comes back without an error."""
+    from ocrs_spark.codec import encode_png
+    from ocrs_spark.fixtures import fake_engine, make_word_image
+    from ocrs_spark.pipeline import extract_payload_batch
+
+    eng = fake_engine()
+    pngs = [encode_png(make_word_image(n)) for n in (1, 2, 3)]
+    gif = colour_gif(make_word_image(2)[:, :, 0])
+    texts, _, _, errors = extract_payload_batch(eng, pngs + [gif])
+    assert errors == [None] * 4
+    assert texts[3] == eng.get_text(eng.prepare_input(decode_image(gif)))
+    assert texts[3]  # the words survive the palette: recognition really ran

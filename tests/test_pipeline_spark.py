@@ -341,11 +341,11 @@ def test_html_spans_flow_through_pipeline(spark):
 
 
 def test_html_sniff_requires_leading_angle_bracket():
-    from ocrs_spark.pipeline import _looks_like_html
+    from ocrs_spark.codec import sniff_format
 
-    assert _looks_like_html(b"<!DOCTYPE html><html></html>")
-    assert _looks_like_html(b"\xef\xbb\xbf  \n<html>x</html>")
-    assert not _looks_like_html(b"%PDF-1.4 ...")
-    assert not _looks_like_html(b"\x89PNG\r\n\x1a\n")
-    assert not _looks_like_html(b"RIFF....WEBP")
-    assert not _looks_like_html(b"plain text payload")
+    assert sniff_format(b"<!DOCTYPE html><html></html>") == "html"
+    assert sniff_format(b"\xef\xbb\xbf  \n<html>x</html>") == "html"
+    assert sniff_format(b"%PDF-1.4 ...") == "pdf"
+    assert sniff_format(b"\x89PNG\r\n\x1a\n") == "png"
+    assert sniff_format(b"RIFF....WEBP") == "webp"
+    assert sniff_format(b"plain text payload") == "unknown"

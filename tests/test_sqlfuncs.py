@@ -9,10 +9,14 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from ocrs_spark.codec import encode_png, encode_rawi
+from ocrs_spark.codec import decode_image, encode_png, encode_rawi
 from ocrs_spark.fixtures import fake_engine, make_word_image
+from ocrs_spark.gif import encode_gif
+from ocrs_spark.jpeg import encode_jpeg
 from ocrs_spark.pdf import encode_pdf
 from ocrs_spark.sqlfuncs import register_sql_functions
+
+from .util import colour_gif
 
 HTML = b"<html><body><p>one paragraph of real body text here</p></body></html>"
 
@@ -26,6 +30,9 @@ def payload_view(spark):
         (3, "pdf", bytearray(encode_pdf(["hello pdf world"]))),
         (4, "html", bytearray(HTML)),
         (5, "bad", bytearray(b"\x00not an image")),
+        (6, "grey gif", bytearray(encode_gif(img[:, :, 0]))),
+        (7, "colour gif", bytearray(colour_gif(img[:, :, 0]))),
+        (8, "jpeg", bytearray(encode_jpeg(img))),
     ]
     df = spark.createDataFrame(rows, "id long, kind string, payload binary")
     df.createOrReplaceTempView("sql_payloads")
@@ -87,6 +94,38 @@ def test_image_meta_dimensions_and_formats(spark, payload_view):
     assert got[3]["format"] == "pdf" and got[3]["width"] is None
     assert got[4]["format"] == "html" and got[4]["error"] is None
     assert got[5]["format"] == "unknown" and got[5]["error"] is not None
+    assert [got[i]["format"] for i in (6, 7, 8)] == ["gif", "gif", "jpeg"]
+    for i, c in ((6, 1), (7, 3), (8, 3)):
+        assert (got[i]["width"], got[i]["height"], got[i]["channels"]) == (w, h, c)
+        assert got[i]["error"] is None
+
+
+def test_sql_udf_and_library_agree_row_for_row(spark, payload_view):
+    """SQL ``ocr_text``, the pipeline's ``ocr_image_spans`` mapInPandas
+    path and ``OcrEngine.get_text`` give the same text for every row:
+    every format, GIFs with grey and colour palettes included."""
+    from ocrs_spark.pipeline import ocr_image_spans
+
+    sql = _by_id(
+        spark.sql("SELECT id, ocr_text(payload) AS t FROM sql_payloads").collect()
+    )
+    spans = spark.sql(
+        "SELECT CAST(id AS STRING) AS doc_id, 'image' AS kind, "
+        "CAST(id AS STRING) AS media_ref, 0 AS offset FROM sql_payloads"
+    )
+    media = spark.sql(
+        "SELECT CAST(id AS STRING) AS media_ref, payload AS bytes FROM sql_payloads"
+    )
+    udf = {
+        int(r["doc_id"]): r["ocr_text"]
+        for r in ocr_image_spans(spans, media, {"kind": "fake"}).collect()
+    }
+    assert udf == {i: r["t"] for i, r in sql.items()}
+    eng = fake_engine()
+    images = "SELECT id, payload FROM sql_payloads WHERE id IN (1, 2, 6, 7, 8)"
+    for r in spark.sql(images).collect():
+        want = eng.get_text(eng.prepare_input(decode_image(bytes(r["payload"]))))
+        assert want and sql[r["id"]]["t"] == want
 
 
 def test_sql_surface_composes_with_relational_sql(spark, payload_view):
@@ -99,7 +138,7 @@ def test_sql_surface_composes_with_relational_sql(spark, payload_view):
         WHERE r.error IS NULL AND r.n_words > 0
         """
     ).collect()[0]["n"]
-    assert n == 4  # rawi + png + pdf + html all carry words; the bad row is filtered
+    assert n == 7  # every row but the bad one carries words and is kept
 
     words = _by_id(
         spark.sql(

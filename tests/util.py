@@ -31,3 +31,14 @@ def gen_test_image(n_words: int, shape=(3, 100, 200)) -> np.ndarray:
     for i in range(n_words):
         img[:, 30:50, i * 70 : i * 70 + 50] = 1.0
     return img
+
+
+def colour_gif(grey: np.ndarray) -> bytes:
+    """``encode_gif`` output with its 256-entry global colour table
+    (offset 13) patched to a non-grey palette, so it decodes to RGB."""
+    from ocrs_spark.gif import encode_gif
+
+    buf = bytearray(encode_gif(grey))
+    for i in range(256):
+        buf[13 + 3 * i : 13 + 3 * i + 3] = bytes([i, 255 - i, (i * 3) & 0xFF])
+    return bytes(buf)

@@ -8,10 +8,24 @@ simplify_polygon eps=2, min_area_rect) and
 the published algorithms (Suzuki-Abe border following via Moore tracing,
 Douglas-Peucker, rotating calipers) — no reference code reused.
 
-Connected-component labeling is a vectorized row-run union-find: runs of
-foreground per row are found with np.diff, merged across rows with
-8-connectivity. This keeps the hot loop O(rows + runs) in Python with all
-per-pixel work in numpy.
+The component stages work on a whole batch of masks in array passes, so
+the Python interpreter runs once per pass, not once per pixel run,
+component or contour point:
+
+- labeling: foreground runs of every row of every mask come from one
+  diff per mask; each run finds the runs it touches in the row above
+  (8-connectivity) by ``searchsorted`` on row-keyed run starts and ends,
+  and the roots of the trees those edges join are hooked onto the
+  smaller root, with pointer jumping, until each component is one tree;
+- tracing: the 8-bit Moore neighbourhood of every pixel is computed once
+  per padded mask, and every component of every mask is traced in
+  lock-step, one gather through the ``_TRACE_TABLE`` arrays per step.
+  Once only a few tracers are open, a long contour would cost one pass
+  per step, so those few finish by pointer doubling over the (pixel,
+  backtrack) states of their components, holes left out, instead;
+- Douglas-Peucker runs level by level over all contours at once.
+
+``min_area_rect`` stays scalar: its hulls have 4-10 points.
 """
 
 from __future__ import annotations
@@ -24,96 +38,6 @@ from ..geometry import Rect, RotatedRect
 
 # Moore neighborhood in clockwise order starting from W (dx, dy).
 _MOORE = [(-1, 0), (-1, -1), (0, -1), (1, -1), (1, 0), (1, 1), (0, 1), (-1, 1)]
-
-# Single-slot scratch for _component_runs (reused across same-shaped
-# masks; Spark Python workers are single-threaded processes).
-_RUN_SCRATCH = None
-
-
-def label_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
-    """8-connected component labeling of a boolean mask.
-
-    Returns (labels, n) where labels is int32 (0 = background,
-    components numbered 1..n in raster order of their first pixel).
-    """
-    runs_by_label, h, w = _component_runs(mask)
-    labels = np.zeros((h, w), dtype=np.int32)
-    for lbl, runs in enumerate(runs_by_label, start=1):
-        for y, s, e in runs:
-            labels[y, s:e] = lbl
-    return labels, len(runs_by_label)
-
-
-def _component_runs(mask: np.ndarray):
-    """Row-run union-find labeling. Returns (runs_by_label, h, w) where
-    runs_by_label[i] is the list of (y, start, end) half-open runs of
-    component i+1, in raster order of first appearance."""
-    mask = np.asarray(mask, dtype=bool)
-    h, w = mask.shape
-
-    # All run boundaries in ONE 2D diff (row-major nonzero order pairs
-    # starts with ends per row), instead of h per-row numpy calls. The
-    # scratch buffers are reused across calls (single-slot, per-process)
-    # — this host faults fresh pages at ~20 MB/s, and allocating ~1 MB
-    # of temporaries per image measurably throttles concurrent workers
-    # (see malloc_tuning.py).
-    global _RUN_SCRATCH
-    key = (h, w)
-    if _RUN_SCRATCH is None or _RUN_SCRATCH[0] != key:
-        padded = np.zeros((h, w + 2), dtype=np.int8)
-        diff = np.empty((h, w + 1), dtype=np.int8)
-        _RUN_SCRATCH = (key, padded, diff)
-    _, padded, diff = _RUN_SCRATCH
-    padded[:, 1:-1] = mask
-    np.subtract(padded[:, 1:], padded[:, :-1], out=diff)
-    sy, sx = np.nonzero(diff == 1)
-    _, ex = np.nonzero(diff == -1)
-    n = len(sy)
-
-    parent = list(range(n + 1))  # union-find over run ids 1..n
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-
-    runs = list(zip(sy.tolist(), sx.tolist(), ex.tolist()))
-    prev: list[tuple[int, int, int]] = []  # (start, end, run_id) of row-1
-    cur: list[tuple[int, int, int]] = []
-    cur_row = -1
-    for i, (y, s, e) in enumerate(runs):
-        rid = i + 1
-        if y != cur_row:
-            prev = cur if y == cur_row + 1 else []
-            cur = []
-            cur_row = y
-        # 8-connectivity: overlap with previous row extended by 1 col.
-        for ps, pe, pid in prev:
-            if ps < e + 1 and pe > s - 1:
-                union(rid, pid)
-        cur.append((s, e, rid))
-
-    # Resolve roots to dense component labels in raster order.
-    root_to_label: dict[int, int] = {}
-    runs_by_label: list[list[tuple[int, int, int]]] = []
-    for i, (y, s, e) in enumerate(runs):
-        r = find(i + 1)
-        lbl = root_to_label.get(r)
-        if lbl is None:
-            lbl = len(runs_by_label)
-            root_to_label[r] = lbl
-            runs_by_label.append([])
-        runs_by_label[lbl].append((y, s, e))
-    return runs_by_label, h, w
 
 
 def _ring_index(dx: int, dy: int) -> int:
@@ -128,8 +52,7 @@ def _build_trace_table():
     direction, 8-bit neighborhood mask) precompute the full step — the
     clockwise scan from the backtrack, the move to the first foreground
     neighbor, and the new backtrack direction (toward the last
-    background cell examined). Encodes exactly the scan the loop in the
-    pre-table implementation performed, so traces are bit-identical."""
+    background cell examined)."""
     table = [[None] * 256 for _ in range(8)]
     for bdir in range(8):
         for nb in range(256):
@@ -140,8 +63,7 @@ def _build_trace_table():
                     dx, dy = _MOORE[d]
                     # Last background examined: ring slot before the hit
                     # (for k == 1 that's the old backtrack itself, which
-                    # the scan has not moved past — same as the loop
-                    # leaving bx,by untouched).
+                    # the scan has not moved past).
                     pbx, pby = _MOORE[(bdir + k - 1) & 7]
                     step = (dx, dy, _ring_index(pbx - dx, pby - dy))
                     break
@@ -151,138 +73,384 @@ def _build_trace_table():
 
 _TRACE_TABLE = _build_trace_table()
 
-
-def _neighbor_bits(crop: np.ndarray) -> bytes:
-    """Flat row-major uint8 mask per cell: bit i set iff the Moore
-    neighbor i is foreground. Pure slice arithmetic (no per-cell Python
-    objects); crop carries a 1-pixel False border."""
-    g = crop.view(np.uint8) if crop.dtype == bool else crop.astype(np.uint8)
-    h, w = g.shape
-    nb = np.zeros((h, w), np.uint8)
-    for i, (dx, dy) in enumerate(_MOORE):
-        ys0, ys1 = max(0, -dy), h - max(0, dy)
-        xs0, xs1 = max(0, -dx), w - max(0, dx)
-        nb[ys0:ys1, xs0:xs1] |= g[ys0 + dy : ys1 + dy, xs0 + dx : xs1 + dx] << i
-    return nb.tobytes()
+# _TRACE_TABLE as arrays indexed by ``256 * backtrack + neighbourhood``:
+# the move, the next index base (256 * new backtrack), and whether the
+# pixel is isolated (no move).
+_STEPS = [s or (0, 0, 0) for row in _TRACE_TABLE for s in row]
+_T_DX = np.array([s[0] for s in _STEPS], dtype=np.int64)
+_T_DY = np.array([s[1] for s in _STEPS], dtype=np.int64)
+_T_BASE = np.array([256 * s[2] for s in _STEPS], dtype=np.int64)
+_T_ISOLATED = np.array([s is None for row in _TRACE_TABLE for s in row])
+del _STEPS
+_NO_LIMIT = np.iinfo(np.int64).max
+_BIT = np.array([1 << i for i in range(8)], dtype=np.uint8)
 
 
-def _trace_on_grid(crop: np.ndarray, sx: int, sy: int, max_steps: int) -> list[tuple[int, int]]:
-    """Moore-neighbor tracing (clockwise, Jacob's stopping criterion) on
-    a padded boolean array (crop[y, x]; 1-pixel False border).
-    ``(sx, sy)`` is the topmost-leftmost foreground pixel. Returns
-    border pixels (x, y) in traversal order.
+def _pad_masks(masks: list[np.ndarray]):
+    """Lay the masks out in one flat uint8 grid, each with a 1-pixel
+    background border, and fill a parallel flat array with each interior
+    pixel's Moore neighbourhood: bit i set iff neighbour ``_MOORE[i]`` is
+    foreground (border cells of it are never read). Returns (grid, bits,
+    bases, strides): mask k occupies ``[bases[k], bases[k + 1])`` with row
+    stride ``strides[k]`` (its width + 2)."""
+    strides = np.array([m.shape[1] + 2 for m in masks], dtype=np.int64)
+    sizes = [(m.shape[0] + 2) * s for m, s in zip(masks, strides.tolist())]
+    bases = np.zeros(len(masks) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=bases[1:])
+    total = int(bases[-1])
+    grid = np.empty(total, dtype=np.uint8)
+    bits = np.empty(total, dtype=np.uint8)
+    tmp = np.empty(max(sizes, default=0), dtype=np.uint8)
+    for k, m in enumerate(masks):
+        a, b, w = int(bases[k]), int(bases[k + 1]), int(strides[k])
+        g = grid[a:b].reshape(-1, w)
+        g[0] = g[-1] = 0
+        g[:, 0] = g[:, -1] = 0
+        g[1:-1, 1:-1] = m
+        # Interior pixels lie in [a + w + 1, b - w - 1); neighbour i of
+        # flat cell p is p + dy * w + dx. Bits are set by multiplying,
+        # which numpy runs several times faster than a uint8 left shift.
+        lo, hi = a + w + 1, b - w - 1
+        t = tmp[: hi - lo]
+        for i, (dx, dy) in enumerate(_MOORE):
+            off = dy * w + dx
+            nb = grid[lo + off : hi + off]
+            if i == 0:
+                bits[lo:hi] = nb
+            else:
+                np.multiply(nb, _BIT[i], out=t)
+                bits[lo:hi] |= t
+    return grid, bits, bases, strides
 
-    The per-step neighbor scan is a single lookup in _TRACE_TABLE keyed
-    by the precomputed (vectorized) neighborhood bitmask — the per-step
-    Python work is one bytes index + one table fetch instead of an
-    8-neighbor scan. Returns an (N, 2) int32 array (flat int appends
-    into array.array beat building N coordinate tuples)."""
-    import array as _array
 
-    nb = _neighbor_bits(crop)
-    w = crop.shape[1]
-    table = _TRACE_TABLE
-    coords = _array.array("i", (sx, sy))
-    push = coords.append
-    cx, cy = sx, sy
-    bdir = 0  # entered the start pixel from the West
-    fmx = fmy = -1  # first move (Jacob's stopping criterion)
-    for _ in range(max_steps):
-        step = table[bdir][nb[cy * w + cx]]
-        if step is None:
-            break  # isolated pixel
-        dx, dy, bdir = step
-        nx, ny = cx + dx, cy + dy
-        if cx == sx and cy == sy:
-            if fmx < 0:
-                fmx, fmy = nx, ny
-            elif nx == fmx and ny == fmy:
-                break  # completed the loop
-        cx, cy = nx, ny
-        push(nx)
-        push(ny)
-    else:
+def _runs(grid, bases, strides):
+    """Foreground runs of every row of every padded mask, as flat
+    half-open ``[start, end)`` grid positions in raster order, and the
+    mask each run lies in. The zero border keeps every run
+    inside one row of one mask."""
+    change = np.flatnonzero(grid[1:] != grid[:-1]) + 1
+    rising = grid[change] == 1
+    start, end = change[rising], change[~rising]
+    return start, end, np.searchsorted(bases, start, "right") - 1
+
+
+def _label_runs(start, end, stride, diagonal=True):
+    """Dense connected-component label of every run, 8-connected (or
+    4-connected when ``diagonal`` is false), numbered in raster order of
+    each component's first run. Returns (labels, first run of each
+    label)."""
+    n = start.size
+    lab = np.arange(n)
+    # The runs of the row above that touch [start - 1, end + 1) (or
+    # [start, end) when 4-connected) form a contiguous range [lo, hi) of
+    # the raster-ordered runs.
+    sides = ("left", "right") if diagonal else ("right", "left")
+    lo = np.searchsorted(end, start - stride, sides[0])
+    hi = np.searchsorted(start, end - stride, sides[1])
+    cnt = np.maximum(hi - lo, 0)
+    src = np.repeat(lab, cnt)
+    dst = np.arange(src.size) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+    # Every run points at a smaller-or-equal run; roots point at
+    # themselves. Each round hooks the larger root of every edge that
+    # joins two trees onto the smaller one, flattens the trees by pointer
+    # jumping and drops the edges now inside one tree. Whole trees move
+    # each round, so the rounds do not grow with a component's height: a
+    # 400-row U, a diagonal cross or a spiral takes two.
+    while src.size:
+        r_s, r_d = lab[src], lab[dst]
+        low = np.minimum(r_s, r_d)
+        np.minimum.at(lab, r_s, low)
+        np.minimum.at(lab, r_d, low)
+        while True:  # pointer jumping to each tree's root
+            up = lab[lab]
+            if np.array_equal(up, lab):
+                break
+            lab = up
+        live = lab[src] != lab[dst]
+        src, dst = src[live], dst[live]
+    # Each root is its component's smallest run index, i.e. its first run.
+    first = np.flatnonzero(lab == np.arange(n))
+    return np.searchsorted(first, lab), first
+
+
+def label_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
+    """8-connected component labeling of a boolean mask.
+
+    Returns (labels, n) where labels is int32 (0 = background,
+    components numbered 1..n in raster order of their first pixel).
+    """
+    mask = np.asarray(mask, dtype=bool)
+    h, w = mask.shape
+    grid, _, bases, strides = _pad_masks([mask])
+    start, end, owner = _runs(grid, bases, strides)
+    comp, first = _label_runs(start, end, strides[owner])
+    padded = np.zeros((h + 2) * (w + 2), dtype=np.int32)
+    length = end - start
+    pix = np.repeat(start - (np.cumsum(length) - length), length) + np.arange(length.sum())
+    padded[pix] = np.repeat(comp + 1, length)
+    return padded.reshape(h + 2, w + 2)[1:-1, 1:-1].copy(), first.size
+
+
+# Lock-step tracing costs about ten numpy calls per step, however few
+# tracers are still open; once this few remain, they finish by pointer
+# doubling, whose passes grow with the log of the contour length.
+_LOCKSTEP_MIN_TRACERS = 8
+
+
+def _trace(bits, start, stride, bound, runs):
+    """Moore-neighbour tracing (clockwise, Jacob's stopping criterion)
+    of every component at once, each from its topmost-leftmost pixel
+    ``start`` (flat index into ``bits``, row stride ``stride``), entered
+    from the West. Tracer i traces component i of ``runs`` (run starts,
+    run ends, component of each run, flat start of each run's row). Raises once a tracer has taken
+    ``bound`` steps without closing. Returns (tracer id, position) of
+    every visited pixel, grouped by tracer in step order."""
+    n = start.size
+    # One copy of the step tables per distinct row stride: a tracer's
+    # table index is 2048 * its stride class + 256 * backtrack + bits.
+    widths, cls = np.unique(stride, return_inverse=True)
+    move = (_T_DY * widths[:, None] + _T_DX).ravel()
+    base_of = (_T_BASE + 2048 * np.arange(widths.size)[:, None]).ravel()
+    ids, path = [np.arange(n)], [start]
+    # Step 1 leaves every start pixel except isolated ones, and fixes the
+    # first move that Jacob's criterion compares against.
+    moving = ~_T_ISOLATED[bits[start]]
+    tid = np.flatnonzero(moving)
+    start, bound = start[moving], bound[moving]
+    v = bits[start] + 2048 * cls[moving]
+    first = start + move[v]
+    ids.append(tid)
+    path.append(first)
+    pos, base = first, base_of[v]
+    steps = 1
+    limit = int(bound.min(initial=_NO_LIMIT))
+    while tid.size > _LOCKSTEP_MIN_TRACERS:
+        if steps >= limit and (bound <= steps).any():
+            raise RuntimeError("contour tracing did not terminate")
+        v = base + bits[pos]
+        nxt = pos + move[v]
+        steps += 1
+        back = pos == start
+        if back.any() and (done := back & (nxt == first)).any():
+            go = ~done
+            tid, nxt, v, start, first, bound = (a[go] for a in (tid, nxt, v, start, first, bound))
+            limit = int(bound.min(initial=_NO_LIMIT))
+        ids.append(tid)
+        path.append(nxt)
+        pos, base = nxt, base_of[v]
+    if tid.size:
+        back = (base & 2047) >> 8
+        tail = _trace_by_doubling(bits, runs, tid, stride[tid], pos, back, start, first, bound, steps)
+        ids.append(tail[0])
+        path.append(tail[1])
+    ids = np.concatenate(ids)
+    order = np.argsort(ids, kind="stable")
+    return ids[order], np.concatenate(path)[order]
+
+
+def _holes(start, end, row, comp, stride, size):
+    """The holes of each component, as the gaps between its consecutive
+    runs in a row that, with the component alone on the page, are not
+    4-connected to the outside. The runs come ordered by component,
+    raster order within one. Returns (gap starts, gap ends), positions
+    keyed ``comp * size + position`` so that each component's gaps sort
+    apart."""
+    start, end, row = (a + comp * size for a in (start, end, row))
+    inner = (comp[1:] == comp[:-1]) & (row[1:] == row[:-1])
+    gap_start, gap_end, gap_row = end[:-1][inner], start[1:][inner], row[:-1][inner]
+    gap_stride = stride[:-1][inner]
+    # The component's span in each row: its first run start, last run end.
+    opens, closes = np.r_[True, ~inner], np.r_[~inner, True]
+    span_row, span_lo, span_hi = row[opens], start[opens], end[closes]
+    # Cells beside a row's span reach the outside along the row. A gap
+    # touches them if the row above or below has no run of the component
+    # or the gap reaches past that row's span; otherwise it only meets
+    # the runs and gaps of that row.
+    outside = np.zeros(gap_start.size, dtype=bool)
+    for shift in (-gap_stride, gap_stride):
+        k = np.minimum(np.searchsorted(span_row, gap_row + shift), span_row.size - 1)
+        outside |= (span_row[k] != gap_row + shift) | (gap_start + shift < span_lo[k]) | (gap_end + shift > span_hi[k])
+    region, first = _label_runs(gap_start, gap_end, gap_stride, diagonal=False)
+    reaches_out = np.zeros(first.size, dtype=bool)
+    reaches_out[region[outside]] = True
+    hole = ~reaches_out[region]
+    return gap_start[hole], gap_end[hole]
+
+
+def _trace_by_doubling(bits, runs, tid, stride, pos, back, start, first, bound, steps):
+    """Finish the open tracers ``tid`` (sorted), each at ``pos`` with
+    backtrack direction ``back`` after ``steps`` steps, by pointer
+    doubling. A tracer's state is (pixel, backtrack) and the table step
+    is a function of it, so the states of a component's border pixels
+    form a successor graph and its trace is a walk along that graph up
+    to the first state where Jacob's rule stops. Jump tables of 1, 2, 4,
+    ... steps find that state and then every state before it, in
+    log2(walk length) passes. Returns (tracer id, position) of the new
+    steps, grouped by tracer in step order.
+
+    A step moves the backtrack only through background cells that are
+    4-adjacent in turn around the pixel, so a trace that starts outside
+    the component never sees a state whose backtrack cell lies in one of
+    its holes: those states, most of a noisy blob's, are left out."""
+    run_start, run_end, run_comp, run_row = runs
+    picked = np.flatnonzero(np.isin(run_comp, tid))
+    comp = np.searchsorted(tid, run_comp[picked])
+    by_comp = np.argsort(comp, kind="stable")
+    size = bits.size
+    hole_start, hole_end = _holes(
+        *(a[picked][by_comp] for a in (run_start, run_end, run_row)), comp[by_comp], stride[comp[by_comp]], size
+    )
+    rs, length = run_start[picked], (run_end - run_start)[picked]
+    pix = np.repeat(rs - (np.cumsum(length) - length), length) + np.arange(length.sum())
+    owner = np.repeat(comp, length)
+    # States: a component pixel and a background neighbour outside the
+    # component's holes as backtrack, keyed 8 * pixel + backtrack.
+    nb = bits[pix]
+    keys = []
+    for d, (dx, dy) in enumerate(_MOORE):
+        k = np.flatnonzero((nb & _BIT[d]) == 0)
+        if hole_start.size:
+            cell = pix[k] + dy * stride[owner[k]] + dx + owner[k] * size
+            g = np.maximum(np.searchsorted(hole_start, cell, "right") - 1, 0)
+            k = k[(cell < hole_start[g]) | (cell >= hole_end[g])]
+        keys.append(8 * pix[k] + d)
+    key = np.sort(np.concatenate(keys))
+    pix, back_dir = key >> 3, key & 7
+    owner = comp[np.searchsorted(rs, pix, "right") - 1]
+    v = 256 * back_dir + bits[pix]
+    nxt = pix + _T_DY[v] * stride[owner] + _T_DX[v]
+    jump = [np.searchsorted(key, 8 * nxt + (_T_BASE[v] >> 8)).astype(np.int32)]
+    stop = [(pix == start[owner]) & (nxt == first[owner])]
+    del pix, owner, back_dir, v, nxt
+    cur = np.searchsorted(key, 8 * pos + back)
+    # Level j covers the 2**j states from each state on.
+    while not (found := stop[-1][cur]).all():
+        if (steps + (1 << (len(jump) - 1)) >= bound[~found]).any():
+            raise RuntimeError("contour tracing did not terminate")
+        j, s = jump[-1], stop[-1]
+        stop.append(s | s[j])
+        jump.append(j[j])
+    # Steps to the stopping state: descend the levels from the top.
+    at, count = cur, np.zeros(tid.size, dtype=np.int64)
+    for j in range(len(jump) - 2, -1, -1):
+        go = ~stop[j][at]
+        at = np.where(go, jump[j][at], at)
+        count += go.astype(np.int64) << j
+    if (steps + count >= bound).any():
         raise RuntimeError("contour tracing did not terminate")
-    return np.frombuffer(coords, dtype=np.int32).reshape(-1, 2)
+    # The state i + 1 steps on from each tracer's current one, for i <
+    # its count, by the binary digits of i.
+    i = np.arange(count.sum()) - np.repeat(np.cumsum(count) - count, count)
+    state = np.repeat(jump[0][cur], count)
+    for j, table in enumerate(jump):
+        take = ((i >> j) & 1).astype(bool)
+        state[take] = table[state[take]]
+    return np.repeat(tid, count), key[state] >> 3
 
 
-def trace_outer_contour(labels: np.ndarray, label: int, start: tuple[int, int]) -> list[tuple[int, int]]:
-    """Back-compat wrapper: trace one component of a label image."""
-    grid = np.pad(labels == label, 1)
-    sx, sy = start
-    pts = _trace_on_grid(grid, sx + 1, sy + 1, 4 * (labels.size + 8))
-    return [(int(x) - 1, int(y) - 1) for x, y in pts]
+def find_contours_batch(masks: list[np.ndarray]):
+    """Outer contour of each 8-connected component of every mask
+    (counterpart of rten-imageproc find_contours with
+    RetrievalMode::External, used at detection.rs:46).
+
+    Returns (points, offsets, owner): contour c is the ordered border
+    pixels ``points[offsets[c]:offsets[c + 1]]`` as (x, y) int32 rows,
+    of mask ``owner[c]``; contours come mask by mask, each mask's in
+    raster order of their first pixel."""
+    masks = [np.asarray(m, dtype=bool) for m in masks]
+    grid, bits, bases, strides = _pad_masks(masks)
+    start, end, run_mask = _runs(grid, bases, strides)
+    stride = strides[run_mask]
+    comp, first = _label_runs(start, end, stride)
+    ncomp = first.size
+    # Padded bounding box of each component, for the tracer's step bound
+    # of 4 x (padded bounding-box area + 8).
+    row, col = np.divmod(start - bases[run_mask], stride)
+    x0 = np.full(ncomp, _NO_LIMIT)
+    np.minimum.at(x0, comp, col)
+    x1 = np.zeros(ncomp, dtype=np.int64)
+    np.maximum.at(x1, comp, col + (end - start))
+    y1 = np.zeros(ncomp, dtype=np.int64)
+    np.maximum.at(y1, comp, row)
+    bound = 4 * ((y1 - row[first] + 3) * (x1 - x0 + 2) + 8)
+    runs = (start, end, comp, start - col)  # with the flat start of each run's row
+    tracer, pos = _trace(bits, start[first], stride[first], bound, runs)
+    owner = run_mask[first]
+    y, x = np.divmod(pos - bases[owner][tracer], stride[first][tracer])
+    points = np.stack([x - 1, y - 1], axis=1).astype(np.int32)
+    offsets = np.zeros(ncomp + 1, dtype=np.int64)
+    np.cumsum(np.bincount(tracer, minlength=ncomp), out=offsets[1:])
+    return points, offsets, owner
 
 
 def find_contours_external(mask: np.ndarray) -> list[np.ndarray]:
-    """Outer contour of each 8-connected component, as ordered (N, 2)
-    int32 arrays of (x, y) border pixels (counterpart of rten-imageproc
-    find_contours with RetrievalMode::External, used at detection.rs:46).
+    """Outer contour of each 8-connected component of one mask, as
+    ordered (N, 2) int32 arrays of (x, y) border pixels."""
+    points, offsets, _ = find_contours_batch([mask])
+    return [points[a:b] for a, b in zip(offsets[:-1], offsets[1:])]
 
-    Each component is traced on its own padded bounding-box crop (built
-    from the labeling runs), so cost scales with component perimeter,
-    not image area."""
-    runs_by_label, h, w = _component_runs(mask)
-    contours = []
-    for runs in runs_by_label:
-        y0 = runs[0][0]
-        y1 = runs[-1][0]
-        x0 = min(s for _, s, _ in runs)
-        x1 = max(e for _, _, e in runs)
-        ch, cw = y1 - y0 + 1, x1 - x0
-        crop = np.zeros((ch + 2, cw + 2), dtype=bool)
-        for y, s, e in runs:
-            crop[y - y0 + 1, s - x0 + 1 : e - x0 + 1] = True
-        # Start = topmost-leftmost pixel (raster order of first run).
-        sx, sy = runs[0][1] - x0 + 1, 1
-        pts = _trace_on_grid(crop, sx, sy, 4 * ((ch + 2) * (cw + 2) + 8))
-        contours.append(pts + np.array([x0 - 1, y0 - 1], dtype=np.int32))
-    return contours
+
+def simplify_polylines(points, offsets, eps: float):
+    """Douglas-Peucker simplification, endpoints kept (counterpart of
+    rten-imageproc simplify_polygon at detection.rs:50), of every
+    polyline ``points[offsets[c]:offsets[c + 1]]`` at once. Returns
+    (kept points as float64, their offsets).
+
+    Level-synchronous: each pass splits every open segment of every
+    polyline at its first farthest interior point. The kept set only
+    depends on each segment's own endpoints, so it equals the recursive
+    form's. Distances follow the recursive form's exact IEEE sequence
+    (sub, mul, abs, divide by the segment length; strict > first max),
+    and lengths come from ``math.hypot``, which can differ from
+    ``np.hypot`` in the last ulp."""
+    pts = np.asarray(points, dtype=np.float64).reshape(-1, 2)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    xs, ys = pts[:, 0].copy(), pts[:, 1].copy()
+    lens = np.diff(offsets)
+    keep = np.zeros(len(pts), dtype=bool)
+    keep[offsets[:-1][lens > 0]] = True
+    keep[offsets[1:][lens > 0] - 1] = True
+    i0, i1 = offsets[:-1][lens > 2], offsets[1:][lens > 2] - 1
+    while i0.size:
+        span = i1 - i0 - 1
+        seg = np.repeat(np.arange(i0.size), span)
+        head = np.cumsum(span) - span
+        j = np.arange(seg.size) + np.repeat(i0 + 1 - head, span)
+        x0, y0 = xs[i0], ys[i0]
+        ex, ey = xs[i1] - x0, ys[i1] - y0
+        seg_len = np.array(list(map(math.hypot, ex.tolist(), ey.tolist())))
+        dx, dy = xs[j] - x0[seg], ys[j] - y0[seg]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            d = np.abs(ex[seg] * dy - ey[seg] * dx) / seg_len[seg]
+        closed = (seg_len == 0)[seg]
+        if closed.any():
+            # A closed segment measures plain distance to its endpoint,
+            # math.hypot(dx, dy). math.hypot is within 1 ulp (Python >=
+            # 3.10), so only points whose squared distance is within
+            # 1e-9 of the segment's largest can hold the first maximum:
+            # those get math.hypot, the rest -1.
+            q = dx * dx + dy * dy
+            near = closed & (q >= np.maximum.reduceat(q, head)[seg] * (1 - 1e-9))
+            d[closed] = -1.0
+            d[near] = list(map(math.hypot, dx[near].tolist(), dy[near].tolist()))
+        best = np.maximum.reduceat(d, head)
+        hit = np.flatnonzero(d == best[seg])
+        hit = hit[np.r_[True, seg[hit[1:]] != seg[hit[:-1]]]]  # first max
+        split = best > eps
+        bi = j[hit][split]
+        keep[bi] = True
+        a = np.concatenate([i0[split], bi])
+        b = np.concatenate([bi, i1[split]])
+        i0, i1 = a[b > a + 1], b[b > a + 1]
+    return pts[keep], np.concatenate([[0], np.cumsum(keep)])[offsets]
 
 
 def simplify_polyline(points, eps: float) -> np.ndarray:
-    """Douglas-Peucker simplification, endpoints kept (counterpart of
-    rten-imageproc simplify_polygon at detection.rs:50). Accepts a
-    point list or an (N, 2) array; returns an (M, 2) float64 array.
-
-    Pure-Python DP over scalar floats: contours are a few hundred
-    points, where per-call numpy overhead dwarfs the arithmetic. The
-    per-element float ops (sub, mul, abs, divide-by-seg_len, strict >
-    first-max) are the exact IEEE sequence of the vectorized form this
-    replaces, so the kept set is bit-identical."""
-    pts = np.asarray(points, dtype=np.float64)
-    n = len(pts)
-    if n <= 2:
-        return pts
-    xs = pts[:, 0].tolist()
-    ys = pts[:, 1].tolist()
-    keep = [False] * n
-    keep[0] = keep[-1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        i0, i1 = stack.pop()
-        if i1 <= i0 + 1:
-            continue
-        x0, y0 = xs[i0], ys[i0]
-        ex, ey = xs[i1] - x0, ys[i1] - y0
-        seg_len = math.hypot(ex, ey)
-        best = -1.0
-        bi = -1
-        if seg_len == 0:
-            for j in range(i0 + 1, i1):
-                d = math.hypot(xs[j] - x0, ys[j] - y0)
-                if d > best:
-                    best, bi = d, j
-        else:
-            for j in range(i0 + 1, i1):
-                d = abs(ex * (ys[j] - y0) - ey * (xs[j] - x0)) / seg_len
-                if d > best:
-                    best, bi = d, j
-        if best > eps:
-            keep[bi] = True
-            stack.append((i0, bi))
-            stack.append((bi, i1))
-    return pts[keep]
+    """Douglas-Peucker over one polyline (see ``simplify_polylines``).
+    Accepts a point list or an (N, 2) array; returns an (M, 2) float64
+    array."""
+    pts = np.asarray(points, dtype=np.float64).reshape(-1, 2)
+    return simplify_polylines(pts, [0, len(pts)], eps)[0]
 
 
 def convex_hull(points) -> np.ndarray:

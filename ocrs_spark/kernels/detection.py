@@ -11,6 +11,12 @@ Behavioral counterpart of ``ocrs/src/detection.rs``:
 - connected components -> simplify(eps=2) -> min-area rect ->
   expand each side by ``expand_dist`` (3.0) -> drop area < ``min_area``
   (100) (detection.rs:41-62,109-121).
+
+Word boxes are found for a whole batch of masks at once
+(``words_from_masks``, called once per Arrow batch): labeling, tracing
+and simplification are array passes over every component of every mask
+(see ``contours``); only the min-area rect of each simplified contour is
+computed per contour.
 """
 
 from __future__ import annotations
@@ -19,7 +25,7 @@ import numpy as np
 
 from ..geometry import RotatedRect
 from ..models import Model
-from .contours import find_contours_external, min_area_rect, simplify_polyline
+from . import contours
 from .preprocess import BLACK_VALUE
 from .resize import resize_bilinear
 
@@ -28,19 +34,28 @@ DEFAULT_TEXT_THRESHOLD = 0.2
 EXPAND_DIST = 3.0
 
 
-def find_connected_component_rects(
-    mask: np.ndarray, expand_dist: float, min_area: float
-) -> list[RotatedRect]:
-    rects = []
-    for contour in find_contours_external(mask):
-        pts = simplify_polyline(contour, 2.0)
-        rect = min_area_rect(pts)
+def find_connected_component_rects_batch(
+    masks: list[np.ndarray], expand_dist: float, min_area: float
+) -> list[list[RotatedRect]]:
+    """Word rects of every boolean mask, one list per mask."""
+    points, offsets, owner = contours.find_contours_batch(masks)
+    points, offsets = contours.simplify_polylines(points, offsets, 2.0)
+    offsets = offsets.tolist()
+    rects = [[] for _ in masks]
+    for c, k in enumerate(owner.tolist()):
+        rect = contours.min_area_rect(points[offsets[c] : offsets[c + 1]])
         if rect is None:
             continue
         rect = rect.resize(rect.width + 2 * expand_dist, rect.height + 2 * expand_dist)
         if rect.area() >= min_area:
-            rects.append(rect)
+            rects[k].append(rect)
     return rects
+
+
+def find_connected_component_rects(
+    mask: np.ndarray, expand_dist: float, min_area: float
+) -> list[RotatedRect]:
+    return find_connected_component_rects_batch([mask], expand_dist, min_area)[0]
 
 
 class TextDetector:
@@ -115,6 +130,10 @@ class TextDetector:
         prob = self.detect_text_pixels(image)
         return self.words_from_mask(prob)
 
+    def words_from_masks(self, probs: list[np.ndarray]) -> list[list[RotatedRect]]:
+        """Word rects of every probability map of a batch, one list per map."""
+        binaries = [prob > self.text_threshold for prob in probs]
+        return find_connected_component_rects_batch(binaries, EXPAND_DIST, self.min_area)
+
     def words_from_mask(self, prob: np.ndarray) -> list[RotatedRect]:
-        binary = prob > self.text_threshold
-        return find_connected_component_rects(binary, EXPAND_DIST, self.min_area)
+        return self.words_from_masks([prob])[0]

@@ -121,11 +121,15 @@ def mg_candidates(toks: DataFrame, k: int = K, n: DataFrame | None = None) -> Da
 
 def heavy_hitter_tokens(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
     """Exact (token, cnt) for every token with cnt * k > N — sketch
-    pass to bound the candidate set, exact pass to count it. The token
-    total comes from sum(size(tokens)) on the DOCUMENT rows — a codegen
-    projection, not a third explode of the corpus — and the exploded
-    stream exists exactly twice (sketch pass, exact pass), the
-    two-pass minimum the algorithm itself requires."""
+    pass to bound the candidate set, exact pass to count it.
+
+    Each text is split once: the token arrays are materialized with an
+    eager ``localCheckpoint`` and read three times (sketch pass, exact
+    pass, and the token total N as sum(size(tokens)) per row, not a
+    third explode). The tradeoff: ``localCheckpoint`` cuts lineage, so
+    losing an executor loses its blocks and fails the job instead of
+    recomputing them, and the tokenized corpus must fit executor
+    storage (memory, spilling to local disk)."""
     (docs,) = load_tables(spark, sf_dir, "documents")
     # r6: split each text exactly once. The token arrays are spread
     # (the sf corpora scan as ONE parquet partition) and checkpointed,

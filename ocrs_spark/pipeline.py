@@ -147,11 +147,20 @@ def extract_payload_batch(
             errors[i] = f"detect: {exc}"
         masks = []
         ok_idx = []
+    # ... then word boxes for the whole batch in array passes; if that
+    # fails, each image redoes them alone, so only the bad row fails ...
+    try:
+        words_per_image = engine.detector.words_from_masks(masks)
+    except Exception:
+        words_per_image = None
     # ... then per-image layout + recognition (sequential
     # algorithms; the parallel grain is the image/task).
-    for i, mask in zip(ok_idx, masks):
+    for k, (i, mask) in enumerate(zip(ok_idx, masks)):
         try:
-            words = engine.detector.words_from_mask(mask)
+            if words_per_image is None:
+                words = engine.detector.words_from_mask(mask)
+            else:
+                words = words_per_image[k]
             lines = engine.find_text_lines(words)
             recognized = engine.recognize_text(greys[i], lines)
             keep = [l for l in recognized if l is not None]

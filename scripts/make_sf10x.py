@@ -8,8 +8,9 @@ Per-replica transforms (k = 0 keeps the originals):
 - documents: doc_id + 10M*k; every token suffixed '~k' so replicas
   share no vocabulary (near-dup/dedup ops scale by volume, not by
   fabricated cross-replica duplicates); n_chars recomputed.
-- embeddings: vec_id + 10M*k; the vector rolled by k positions
-  (norm/distribution preserved, cross-replica cosine decorrelated).
+- embeddings: vec_id + 10M*k; the vector rolled by k positions, taken
+  mod dim and never 0 (norm/distribution preserved, cross-replica
+  cosine decorrelated).
 - events / TPC-H star: consistent key offsets per replica
   (orderkey/event_id +10M*k, custkey/partkey/user_id +1M*k,
   suppkey +100k*k); nation/region copied (dimension tables).
@@ -49,14 +50,20 @@ def main():
                 f"length({sub})::BIGINT AS n_chars FROM '{SRC}/documents.parquet'"
             )
     con.sql(f"COPY ({reps(docs)}) TO '{OUT}/documents.parquet' (FORMAT PARQUET)")
+    (dim,) = con.sql(f"SELECT max(len(embedding)) FROM '{SRC}/embeddings.parquet'").fetchone()
+    # A roll by a multiple of dim is the identity: replica k would copy
+    # the originals' embeddings. Roll by k % dim, skipping 0 (the roll is
+    # k itself whenever k < dim).
+    assert dim > 1, f"embedding dimension {dim} leaves no non-identity roll"
     embs = []
     for k in range(K):
         if k == 0:
             embs.append(f"SELECT vec_id, embedding, label FROM '{SRC}/embeddings.parquet'")
         else:
+            r = 1 + (k - 1) % (dim - 1)
             embs.append(
                 f"SELECT vec_id + {10_000_000 * k} AS vec_id, "
-                f"(embedding[{k + 1}:] || embedding[1:{k}])::FLOAT[] AS embedding, label "
+                f"(embedding[{r + 1}:] || embedding[1:{r}])::FLOAT[] AS embedding, label "
                 f"FROM '{SRC}/embeddings.parquet'"
             )
     con.sql(f"COPY ({reps(embs)}) TO '{OUT}/embeddings.parquet' (FORMAT PARQUET)")

@@ -146,3 +146,91 @@ def test_model_source_resolution_cache_contract(tmp_path, monkeypatch):
     assert m.resolve_model_source(str(local)) == str(local)
     with _pytest.raises(FileNotFoundError):
         m.resolve_model_source(str(tmp_path / "missing.onnx"))
+
+
+# ------------------------------------------------- frozen layout golden
+
+
+def test_layout_golden_pages_unchanged():
+    """Word boxes, line grouping and text of six generated pages (dense,
+    thumbnails, a two-column page with vertical separators, a noisy page)
+    equal the values frozen before the kernels were batched."""
+    import json
+    import os
+
+    from .util import layout_golden_pages, layout_golden_record
+
+    path = os.path.join(os.path.dirname(__file__), "fixtures", "ocr_layout_golden.json")
+    with open(path) as f:
+        golden = json.load(f)
+    pages = layout_golden_pages()
+    assert [name for name, _ in pages] == list(golden)
+    for name, img in pages:
+        assert layout_golden_record(img) == golden[name], name
+
+
+# ------------------------------------------ batch invariance + row failures
+
+
+def _batch_payloads():
+    from ocrs_spark.codec import encode_png
+
+    from .util import colour_gif, layout_golden_pages
+
+    pages = dict(layout_golden_pages())
+    page, thumb = pages["dense-0"], pages["thumb-0"]
+    blank = np.zeros((64, 128), np.uint8)
+    return [
+        encode_png(page),
+        encode_png(thumb),
+        encode_png(blank),
+        encode_png(page)[:200],  # truncated: undecodable
+        colour_gif(thumb),
+    ]
+
+
+def _page_engine():
+    from ocrs_spark.pipeline import build_engine
+
+    return build_engine({"kind": "fake", "det_h": 400, "det_w": 800})
+
+
+def test_extract_batch_equals_single_rows():
+    from ocrs_spark.pipeline import extract_payload_batch
+
+    eng = _page_engine()
+    payloads = _batch_payloads()
+    batch = list(zip(*extract_payload_batch(eng, payloads)))
+    single = [tuple(col[0] for col in extract_payload_batch(eng, [p])) for p in payloads]
+    assert batch == single
+    errors = [row[3] for row in batch]
+    assert errors[3].startswith("decode:")
+    assert [e for i, e in enumerate(errors) if i != 3] == [None] * 4
+    assert batch[0][1] > 100 and batch[1][1] > 5  # words were really found
+
+
+def test_word_box_failure_stays_in_its_row(monkeypatch):
+    """A word-box failure on one image fails that row alone with an
+    ``ocr:`` error; every other row is unchanged."""
+    from ocrs_spark.codec import encode_png
+    from ocrs_spark.kernels import contours
+    from ocrs_spark.pipeline import extract_payload_batch
+
+    eng = _page_engine()
+    poison = np.zeros((400, 800), np.uint8)
+    poison[100:140, 200:320] = 255  # 120 wide: no other row has such a box
+    payloads = _batch_payloads()
+    payloads.insert(1, encode_png(poison))
+    clean = list(zip(*extract_payload_batch(eng, payloads)))
+
+    real = contours.min_area_rect
+
+    def flaky(points):
+        if 110 <= np.ptp(np.asarray(points)[:, 0]) <= 130:
+            raise ValueError("poisoned contour")
+        return real(points)
+
+    monkeypatch.setattr(contours, "min_area_rect", flaky)
+    rows = list(zip(*extract_payload_batch(eng, payloads)))
+    assert rows[1][3] == "ocr: poisoned contour"
+    assert rows[:1] + rows[2:] == clean[:1] + clean[2:]

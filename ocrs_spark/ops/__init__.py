@@ -34,6 +34,48 @@ def spread(df, min_partitions: int | None = None):
     return df
 
 
+def derived_table(spark, sf_dir: str, name: str, columns, schema: str, row_fn):
+    """A table synthesized row by row from ``documents``, landed once
+    per (session, sf_dir) as ``name``.
+
+    ``row_fn`` receives each row's ``columns`` as Python values; its
+    result fills the ``schema`` columns after ``doc_id``, which is
+    carried through as the first column (a scalar fills one column, a
+    tuple several). ``columns`` is a sequence of column names, or a
+    function of the documents DataFrame returning names and Column
+    expressions; either way nothing is read until the table is built.
+    The scan is spread before the Arrow pass, so the per-row work never
+    runs on one core.
+    """
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from ..matcache import materialize_once
+
+    def build():
+        key, *out_cols = StructType.fromDDL(schema).names
+
+        def batches(pdfs):
+            import pandas as pd
+
+            for pdf in pdfs:
+                args = (col.tolist() for _, col in pdf.iloc[:, 1:].items())
+                vals = [row_fn(*row) for row in zip(*args)]
+                if len(out_cols) == 1:
+                    out = pd.DataFrame({out_cols[0]: vals})
+                else:
+                    out = pd.DataFrame(vals, columns=out_cols)
+                out.insert(0, key, pdf.iloc[:, 0].to_numpy())
+                yield out
+
+        (docs,) = load_tables(spark, sf_dir, "documents")
+        cols = columns(docs) if callable(columns) else columns
+        keyed = docs.select(F.col("doc_id").alias("_doc_id"), *cols)
+        return spread(keyed).mapInPandas(batches, schema=schema)
+
+    return materialize_once(spark, sf_dir, name, build)
+
+
 def all_queries():
     from . import (
         alloc,
@@ -118,7 +160,6 @@ def all_queries():
         postingsize,
         pq,
         profiling,
-        quantiles,
         quota,
         relational,
         retrieval,
@@ -162,7 +203,7 @@ def all_queries():
     )
 
     out = {}
-    for mod in (relational, alloc, anchortext, audio, video, bitext, bloomskip, chunking, hllrollup, bootstrap, bpe, budget, canonical, captions, cdc, ccnet, changepoint, changerate, classeval, compaction, cooccur, countmin, gopher, lmscore, dedup, decontam, curation, curastream, dataorder, datauri, denoise, doremi, dpp, dsir, entropy, joinsize, kmv, semistruct, setjoin, sitemaps, drift, funnel, fuzzyjoin, gateeval, gateorder, gatewaterfall, graphsample, labelprop, langseg, heavyhitters, hybrid, ireval, dedupgraph, imagededup, imagemeta, mediarouter, increment, ivm, semdedup, nbclassify, negatives, similarity, skyline, textstats, trend, trending, mirrors, mixture, multimodal, novelty, zipf, skew, skewadvisor, pii, postings, postingsize, pq, ocreval, officedoc, outline, profiling, quantiles, quota, retrieval, reshard, robust, percolate, shardexport, packing, streamrows, substrdedup, subtitles, tables, passagededup, warehouse, watermark, wsample, timeseries, texttile, splits, hostrep, triangles, templates, temporal, scd2, webdoc, pdfmixed, webarchive, webdataset, icebergops, linkgraph, lshcal, mailbox, logreg, crawlplan, urlnorm, urlpairs, vocab, vocabcurve, urltemplates, robotsops, winnow, zorder):
+    for mod in (relational, alloc, anchortext, audio, video, bitext, bloomskip, chunking, hllrollup, bootstrap, bpe, budget, canonical, captions, cdc, ccnet, changepoint, changerate, classeval, compaction, cooccur, countmin, gopher, lmscore, dedup, decontam, curation, curastream, dataorder, datauri, denoise, doremi, dpp, dsir, entropy, joinsize, kmv, semistruct, setjoin, sitemaps, drift, funnel, fuzzyjoin, gateeval, gateorder, gatewaterfall, graphsample, labelprop, langseg, heavyhitters, hybrid, ireval, dedupgraph, imagededup, imagemeta, mediarouter, increment, ivm, semdedup, nbclassify, negatives, similarity, skyline, textstats, trend, trending, mirrors, mixture, multimodal, novelty, zipf, skew, skewadvisor, pii, postings, postingsize, pq, ocreval, officedoc, outline, profiling, quota, retrieval, reshard, robust, percolate, shardexport, packing, streamrows, substrdedup, subtitles, tables, passagededup, warehouse, watermark, wsample, timeseries, texttile, splits, hostrep, triangles, templates, temporal, scd2, webdoc, pdfmixed, webarchive, webdataset, icebergops, linkgraph, lshcal, mailbox, logreg, crawlplan, urlnorm, urlpairs, vocab, vocabcurve, urltemplates, robotsops, winnow, zorder):
         out.update(mod.QUERIES)
     return out
 
@@ -251,7 +292,6 @@ def all_oracles():
         postingsize,
         pq,
         profiling,
-        quantiles,
         quota,
         relational,
         retrieval,
@@ -295,6 +335,6 @@ def all_oracles():
     )
 
     out = {}
-    for mod in (relational, alloc, anchortext, audio, video, bitext, bloomskip, chunking, hllrollup, bootstrap, bpe, budget, canonical, captions, cdc, ccnet, changepoint, changerate, classeval, compaction, cooccur, countmin, gopher, lmscore, dedup, decontam, curation, curastream, dataorder, datauri, denoise, doremi, dpp, dsir, entropy, joinsize, kmv, semistruct, setjoin, sitemaps, drift, funnel, fuzzyjoin, gateeval, gateorder, gatewaterfall, graphsample, labelprop, langseg, heavyhitters, hybrid, ireval, dedupgraph, imagededup, imagemeta, mediarouter, increment, ivm, semdedup, nbclassify, negatives, similarity, skyline, textstats, trend, trending, mirrors, mixture, multimodal, novelty, zipf, skew, skewadvisor, pii, postings, postingsize, pq, ocreval, officedoc, outline, profiling, quantiles, quota, retrieval, reshard, robust, percolate, shardexport, packing, streamrows, substrdedup, subtitles, tables, passagededup, warehouse, watermark, wsample, timeseries, texttile, splits, hostrep, triangles, templates, temporal, scd2, webdoc, pdfmixed, webarchive, webdataset, icebergops, linkgraph, lshcal, mailbox, logreg, crawlplan, urlnorm, urlpairs, vocab, vocabcurve, urltemplates, robotsops, winnow, zorder):
+    for mod in (relational, alloc, anchortext, audio, video, bitext, bloomskip, chunking, hllrollup, bootstrap, bpe, budget, canonical, captions, cdc, ccnet, changepoint, changerate, classeval, compaction, cooccur, countmin, gopher, lmscore, dedup, decontam, curation, curastream, dataorder, datauri, denoise, doremi, dpp, dsir, entropy, joinsize, kmv, semistruct, setjoin, sitemaps, drift, funnel, fuzzyjoin, gateeval, gateorder, gatewaterfall, graphsample, labelprop, langseg, heavyhitters, hybrid, ireval, dedupgraph, imagededup, imagemeta, mediarouter, increment, ivm, semdedup, nbclassify, negatives, similarity, skyline, textstats, trend, trending, mirrors, mixture, multimodal, novelty, zipf, skew, skewadvisor, pii, postings, postingsize, pq, ocreval, officedoc, outline, profiling, quota, retrieval, reshard, robust, percolate, shardexport, packing, streamrows, substrdedup, subtitles, tables, passagededup, warehouse, watermark, wsample, timeseries, texttile, splits, hostrep, triangles, templates, temporal, scd2, webdoc, pdfmixed, webarchive, webdataset, icebergops, linkgraph, lshcal, mailbox, logreg, crawlplan, urlnorm, urlpairs, vocab, vocabcurve, urltemplates, robotsops, winnow, zorder):
         out.update(mod.ORACLES)
     return out

@@ -39,8 +39,9 @@ with what Spark parses out of the markup.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
+
+from . import derived_table
 
 HTML_SCHEMA = "doc_id bigint, html string"
 VOCAB = ["download", "guide", "homepage", "paper", "reference", "results"]
@@ -82,32 +83,14 @@ def _anchored_html(doc_id: int, text: str, n: int) -> str:
 
 
 def _anchored_corpus(spark, sf_dir: str):
-    """(doc_id, html) with planted anchors, landed once per session."""
-    from ..matcache import materialize_once
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        n = docs.count()
-
-        def synth(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "html": [
-                            _anchored_html(int(d), t, n)
-                            for d, t in zip(pdf["doc_id"], pdf["text"])
-                        ],
-                    }
-                )
-
-        return (
-            docs.select("doc_id", "text")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInPandas(synth, schema=HTML_SCHEMA)
-        )
-
-    return materialize_once(spark, sf_dir, "anchored_html_docs", build)
+    """(doc_id, html) with planted anchors, landed once per session.
+    The corpus size is a scalar subquery of the build, so it is
+    counted only when the table is built."""
+    return derived_table(
+        spark, sf_dir, "anchored_html_docs",
+        lambda docs: ("doc_id", "text", docs.select(F.count("*")).scalar()),
+        HTML_SCHEMA, _anchored_html,
+    )
 
 
 def anchor_edges(pages, html_col: str = "html", src_col: str = "doc_id"):

@@ -41,8 +41,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from . import load_tables
-from ..matcache import materialize_once
+from . import derived_table
 
 A_MUL = 2654435761
 B_MUL = 40503
@@ -101,27 +100,15 @@ def decode_wav(buf: bytes) -> tuple[int, np.ndarray]:
     return rate, data
 
 
+def _wav(doc_id: int) -> bytes:
+    return encode_wav(_samples(doc_id), _rate(doc_id))
+
+
 def _wav_payloads(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids = pdf["doc_id"].tolist()
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "payload": [
-                            encode_wav(_samples(d), _rate(d)) for d in ids
-                        ],
-                    }
-                )
-
-        return docs.select("doc_id").mapInPandas(
-            gen, schema="doc_id bigint, payload binary"
-        )
-
-    return materialize_once(spark, sf_dir, "wav_payloads", build)
+    return derived_table(
+        spark, sf_dir, "wav_payloads", ("doc_id",),
+        "doc_id bigint, payload binary", _wav,
+    )
 
 
 def audio_wav_features(spark, sf_dir: str):

@@ -12,8 +12,9 @@ in ONE corpus scan as 2B conditional aggregate pairs — the same
 sweep-on-the-aggregate trick as classeval's PR curve, so adding
 replicas never rescans the data — then the replica means (a B-row
 frame) unpivot and the 2.5%/97.5% exact percentiles become the
-interval, pinned to the quantiles module's (n-1)*p convention so
-DuckDB's quantile_cont agrees bit-for-bit.
+interval, by linear interpolation at rank (n-1)*p (Spark's
+``percentile`` convention), so DuckDB's quantile_cont agrees
+bit-for-bit.
 
 Half-subsampling (m-out-of-n bootstrap, m = n/2) is used instead of
 Poisson/multinomial resampling because inclusion is a pure integer

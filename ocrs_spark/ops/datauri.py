@@ -28,8 +28,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from . import load_tables
-from ..matcache import materialize_once
+from . import derived_table
 
 URI_SCHEMA = (
     "doc_id bigint, n_uris int, png_w int, png_h int, png_caption "
@@ -65,21 +64,10 @@ def _page(doc_id: int) -> str:
 
 
 def _pages(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids = pdf["doc_id"].tolist()
-                yield pd.DataFrame(
-                    {"doc_id": ids, "html": [_page(d) for d in ids]}
-                )
-
-        return docs.select("doc_id").mapInPandas(
-            gen, schema="doc_id bigint, html string"
-        )
-
-    return materialize_once(spark, sf_dir, "data_uri_pages", build)
+    return derived_table(
+        spark, sf_dir, "data_uri_pages", ("doc_id",),
+        "doc_id bigint, html string", _page,
+    )
 
 
 def data_uri_images(spark, sf_dir: str):

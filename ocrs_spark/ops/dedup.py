@@ -182,28 +182,33 @@ def _minhash_signature_df(spark, sf_dir):
     )
 
 
-def _bands_df(spark, sf_dir):
-    # r6: ALL bands in one posexplode projection — the former per-band
-    # select + unionAll re-ran the full signature aggregation once per
-    # band whenever exchange reuse didn't kick in; one pass cannot.
-    sig = _minhash_signature_df(spark, sf_dir)
-    rows_per_band = MINHASH_K // LSH_BANDS
-    band_hashes = F.array(
-        *[
-            F.md5(
-                F.concat(
-                    *[
-                        F.col(f"s{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ]
+def minhash_band_keys(sig, configs=(LSH_BANDS,)):
+    """(doc_id, n_bands, band_index, band_hash) for every band of every
+    banding split in ``configs`` of the K-hash signature frame ``sig``:
+    band b of an n-band split is the md5 of signature columns
+    b*K/n .. (b+1)*K/n - 1. All bands come out of ONE explode
+    projection — a per-band select + unionAll re-ran the signature
+    subtree once per band whenever exchange reuse did not fire."""
+    entries = []
+    for n_bands in configs:
+        rows = MINHASH_K // n_bands
+        for b in range(n_bands):
+            cols = [F.col(f"s{b * rows + r}") for r in range(rows)]
+            entries.append(
+                F.struct(
+                    F.lit(int(n_bands)).cast("long").alias("n_bands"),
+                    F.lit(b).alias("band_index"),
+                    F.md5(F.concat(*cols)).alias("band_hash"),
                 )
             )
-            for b in range(LSH_BANDS)
-        ]
+    return sig.select("doc_id", F.explode(F.array(*entries)).alias("e")).select(
+        "doc_id", "e.*"
     )
-    return sig.select(
-        "doc_id", F.posexplode(band_hashes).alias("band_index", "band_hash")
-    )
+
+
+def _bands_df(spark, sf_dir):
+    sig = _minhash_signature_df(spark, sf_dir)
+    return minhash_band_keys(sig).drop("n_bands")
 
 
 def minhash_lsh_buckets(spark, sf_dir):
@@ -506,33 +511,15 @@ def embedding_near_dup_pairs(emb, threshold: float = COSINE_THRESHOLD):
     round-1 label-blocking weakness) + exact double-precision cosine
     verification on candidates only (same fold order as the oracle so
     rounded values agree bit-for-bit)."""
-    from .similarity import banded_buckets
+    from .similarity import banded_buckets, bucket_pairs
 
     bb = banded_buckets(emb, EMB_LSH_BANDS, EMB_LSH_ROWS, EMB_PLANE_BASE)
     # In-bucket pair explosion instead of a bb-self-join: a self-join
     # re-executes the whole bucketing subtree (scan + matmul UDF) on
-    # both sides, and broadcast-hash prevents ReusedExchange. One
-    # groupBy computes the buckets ONCE; per-group pair fan-out is
-    # bounded by bucket occupancy — the same bound the self-join had —
-    # so the 100-TB behavior is unchanged while the small-SF plan drops
-    # from 4 bucketing passes to 1. Sorted ids keep vec_a < vec_b,
-    # matching the oracle's self-join candidates exactly.
-    cand = (
-        bb.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> transform("
-                    "slice(ids, i + 2, size(ids)), "
-                    "b -> named_struct('vec_a', a, 'vec_b', b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.vec_a", "p.vec_b")
-        .distinct()
-    )
+    # both sides, and broadcast-hash prevents ReusedExchange. Sorted
+    # ids keep vec_a < vec_b, matching the oracle's self-join
+    # candidates exactly.
+    cand = bucket_pairs(bb, ["band", "bucket"], "vec_id", ("vec_a", "vec_b"))
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
     # r6: cosine verify via the cumsum-sequential Arrow kernel — same

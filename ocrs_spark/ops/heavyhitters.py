@@ -1,7 +1,7 @@
 """Heavy-hitter tokens: every token whose corpus frequency exceeds
 N/K, found with a mergeable Misra-Gries sketch + an exact verification
-pass — the frequency member of the engine's mergeable-sketch trio
-(profiling's HLL distinct counts, quantiles' KLL ranks, MG here).
+pass — the frequency member of the engine's mergeable sketches
+(profiling's HLL distinct counts, MG here).
 
 Why not just groupBy(token)? That's the exact pass — and for the FULL
 vocabulary it's a corpus-sized shuffle whose reduce state is the

@@ -37,10 +37,10 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from . import load_tables
+from . import derived_table
 from ..codec import decode_image, encode_png, encode_rawi
 from ..kernels.resize import resize_bilinear
-from ..matcache import materialize_once
+from .similarity import bucket_pairs
 
 HASH_BITS = 64
 BANDS = 4
@@ -92,30 +92,17 @@ def _hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
-def _synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {"doc_id": [], "payload": []}
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            img = _synth_image(doc_id)
-            enc = encode_rawi(img) if _FMTS[doc_id % 2] == "rawi" else encode_png(img)
-            rows["doc_id"].append(doc_id)
-            rows["payload"].append(enc)
-        yield pd.DataFrame(rows)
+def _synth_payload(doc_id: int) -> bytes:
+    img = _synth_image(doc_id)
+    return encode_rawi(img) if _FMTS[doc_id % 2] == "rawi" else encode_png(img)
 
 
 def image_payload_table(spark, sf_dir):
     """Structured-image payload corpus, landed once per (session, sf)."""
-
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-        return (
-            docs.select("doc_id")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInPandas(_synth_batches, schema="doc_id bigint, payload binary")
-        )
-
-    return materialize_once(spark, sf_dir, "img_payloads", build)
+    return derived_table(
+        spark, sf_dir, "img_payloads", ("doc_id",),
+        "doc_id bigint, payload binary", _synth_payload,
+    )
 
 
 def image_hashes(spark, sf_dir):
@@ -138,31 +125,11 @@ def dhash_pairs(hashes, hamming_max: int = HAMMING_MAX):
     bands = hashes.select(
         "doc_id", "dhash", F.posexplode(band_vals).alias("band", "bv")
     )
-    # In-bucket pair explosion instead of a bands self-join (the
-    # embedding_near_dup_pairs idiom): the self-join re-executed the
-    # decode->hash chain on both sides; one groupBy computes the bands
-    # ONCE and per-group fan-out is bounded by bucket occupancy — the
-    # same bound the join had. Sorted structs keep doc_a < doc_b.
-    cand = (
-        bands.groupBy("band", "bv")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("doc_id", "dhash"))).alias(
-                "ms"
-            )
-        )
-        .filter(F.size("ms") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ms, (a, i) -> transform("
-                    "slice(ms, i + 2, size(ms)), "
-                    "b -> named_struct('doc_a', a.doc_id, 'doc_b', b.doc_id,"
-                    " 'ha', a.dhash, 'hb', b.dhash))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b", "p.ha", "p.hb")
-        .distinct()
+    # In-bucket pair explosion instead of a bands self-join: the
+    # self-join re-executed the decode->hash chain on both sides.
+    cand = bucket_pairs(
+        bands, ["band", "bv"], "doc_id", ("doc_a", "doc_b", "ha", "hb"),
+        carry="dhash",
     )
     return (
         cand.withColumn("hamming", F.bit_count(F.expr("ha ^ hb")).cast("int"))

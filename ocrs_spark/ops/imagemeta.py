@@ -31,9 +31,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from . import load_tables
+from . import derived_table
 from ..codec import decode_png, encode_png
-from ..matcache import materialize_once
 
 META_SCHEMA = (
     "doc_id bigint, width int, height int, n_chunks int, description "
@@ -96,24 +95,10 @@ def extract_png_text(buf: bytes):
 
 
 def _png_payloads(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids = pdf["doc_id"].tolist()
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "payload": [_png_with_text(d) for d in ids],
-                    }
-                )
-
-        return docs.select("doc_id").mapInPandas(
-            gen, schema="doc_id bigint, payload binary"
-        )
-
-    return materialize_once(spark, sf_dir, "png_text_payloads", build)
+    return derived_table(
+        spark, sf_dir, "png_text_payloads", ("doc_id",),
+        "doc_id bigint, payload binary", _png_with_text,
+    )
 
 
 def png_text_metadata(spark, sf_dir: str):
@@ -182,21 +167,10 @@ def _gif_payload(doc_id: int) -> bytes:
 
 
 def _gif_payloads(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids = pdf["doc_id"].tolist()
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [_gif_payload(d) for d in ids]}
-                )
-
-        return docs.select("doc_id").mapInPandas(
-            gen, schema="doc_id bigint, payload binary"
-        )
-
-    return materialize_once(spark, sf_dir, "gif_payloads", build)
+    return derived_table(
+        spark, sf_dir, "gif_payloads", ("doc_id",),
+        "doc_id bigint, payload binary", _gif_payload,
+    )
 
 
 def gif_decode_meta(spark, sf_dir: str):
@@ -275,21 +249,10 @@ def _agif_payload(doc_id: int) -> bytes:
 
 
 def _agif_payloads(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids = pdf["doc_id"].tolist()
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [_agif_payload(d) for d in ids]}
-                )
-
-        return docs.select("doc_id").mapInPandas(
-            gen, schema="doc_id bigint, payload binary"
-        )
-
-    return materialize_once(spark, sf_dir, "agif_payloads", build)
+    return derived_table(
+        spark, sf_dir, "agif_payloads", ("doc_id",),
+        "doc_id bigint, payload binary", _agif_payload,
+    )
 
 
 def gif_animation_meta(spark, sf_dir: str):

@@ -28,26 +28,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from . import load_tables
-from .dedup import LSH_BANDS, MINHASH_K, _minhash_signature_df
+from .dedup import LSH_BANDS, MINHASH_K, _minhash_signature_df, minhash_band_keys
 
 DELTA_MOD = 3  # doc_id % 3 == 0 is the incoming batch
 
 
 def _bands_from_sig(sig):
     """(doc_id, band_index, band_hash) from a signature frame — the
-    persisted fingerprint-index layout. r6: one posexplode projection
-    instead of a per-band select + unionAll (which re-ran the upstream
-    signature subtree once per band when exchange reuse didn't fire)."""
-    rows = MINHASH_K // LSH_BANDS
-    band_hashes = F.array(
-        *[
-            F.md5(F.concat(*[F.col(f"s{b * rows + r}") for r in range(rows)]))
-            for b in range(LSH_BANDS)
-        ]
-    )
-    return sig.select(
-        "doc_id", F.posexplode(band_hashes).alias("band_index", "band_hash")
-    )
+    persisted fingerprint-index layout."""
+    return minhash_band_keys(sig).drop("n_bands")
 
 
 def incremental_neardup(spark, sf_dir: str):

@@ -31,8 +31,9 @@ Ranks stay (node, double) — O(N) rows, never collected.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
+
+from . import derived_table
 
 DAMPING = 0.875  # 7/8: exact in binary, so iteration arithmetic stays exact
 TELEPORT = 0.125  # 1 - DAMPING
@@ -66,32 +67,14 @@ def _linked_html(doc_id: int, text: str, n: int) -> str:
 
 
 def _linked_corpus(spark, sf_dir: str):
-    """(doc_id, html) with planted outlinks, landed once per session."""
-    from ..matcache import materialize_once
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        n = docs.count()
-
-        def synth(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "html": [
-                            _linked_html(int(d), t, n)
-                            for d, t in zip(pdf["doc_id"], pdf["text"])
-                        ],
-                    }
-                )
-
-        return (
-            docs.select("doc_id", "text")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInPandas(synth, schema=HTML_SCHEMA)
-        )
-
-    return materialize_once(spark, sf_dir, "linked_html_docs", build)
+    """(doc_id, html) with planted outlinks, landed once per session.
+    The corpus size is a scalar subquery of the build, so it is
+    counted only when the table is built."""
+    return derived_table(
+        spark, sf_dir, "linked_html_docs",
+        lambda docs: ("doc_id", "text", docs.select(F.count("*")).scalar()),
+        HTML_SCHEMA, _linked_html,
+    )
 
 
 def _edges(spark, sf_dir: str):

@@ -23,8 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .dedup import MINHASH_K, _minhash_signature_df
+from .dedup import MINHASH_K, _minhash_signature_df, minhash_band_keys
 from .setjoin import ORACLE_EXACT_JACCARD, exact_jaccard_join
+from .similarity import bucket_pairs
 
 CONFIGS = (1, 2, 4, 8)  # n_bands; rows_per_band = MINHASH_K / n_bands
 
@@ -36,7 +37,7 @@ def _candidates(sig, n_bands: int):
 
 def _all_candidates(sig, configs):
     """Distinct (n_bands, doc_a, doc_b) for EVERY banding config in one
-    pass (r6): all configs' band hashes come out of a single posexplode
+    pass (r6): all configs' band hashes come out of a single explode
     projection (1 + 2 + ... bands per doc), pairs form by in-bucket
     explosion keyed on (n_bands, band_index, band_hash), and ONE
     distinct dedups all configs — the former per-config
@@ -44,37 +45,12 @@ def _all_candidates(sig, configs):
     over the same checkpointed signature. Per-config results are
     identical: a bucket key carries its config, so no cross-config
     pairs exist."""
-    entries = []
-    for n_bands in configs:
-        rows = MINHASH_K // n_bands
-        for b in range(n_bands):
-            cols = [F.col(f"s{b * rows + r}") for r in range(rows)]
-            entries.append(
-                F.struct(
-                    F.lit(int(n_bands)).cast("long").alias("n_bands"),
-                    F.lit(b).alias("band_index"),
-                    F.md5(F.concat(*cols)).alias("band_hash"),
-                )
-            )
-    bands = sig.select(
-        "doc_id", F.explode(F.array(*entries)).alias("e")
-    ).select("doc_id", "e.n_bands", "e.band_index", "e.band_hash")
-    return (
-        bands.groupBy("n_bands", "band_index", "band_hash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(
-            "n_bands",
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> transform("
-                    "slice(ids, i + 2, size(ids)), "
-                    "b -> named_struct('doc_a', a, 'doc_b', b))))"
-                )
-            ).alias("p"),
-        )
-        .select("n_bands", "p.doc_a", "p.doc_b")
-        .distinct()
+    return bucket_pairs(
+        minhash_band_keys(sig, configs),
+        ["n_bands", "band_index", "band_hash"],
+        "doc_id",
+        ("doc_a", "doc_b"),
+        keep=["n_bands"],
     )
 
 

@@ -26,8 +26,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from . import load_tables
-from ..matcache import materialize_once
+from . import derived_table
 
 QP_WRAP = 40
 
@@ -104,28 +103,10 @@ def parse_message(raw: str) -> tuple[dict[str, str], str]:
 
 
 def _mail_payloads(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "raw": [
-                            build_message(int(d), s, t)
-                            for d, s, t in zip(
-                                pdf["doc_id"], pdf["source"], pdf["text"]
-                            )
-                        ],
-                    }
-                )
-
-        return docs.select("doc_id", "source", "text").mapInPandas(
-            gen, schema="doc_id bigint, raw string"
-        )
-
-    return materialize_once(spark, sf_dir, "mail_payloads", build)
+    return derived_table(
+        spark, sf_dir, "mail_payloads", ("doc_id", "source", "text"),
+        "doc_id bigint, raw string", build_message,
+    )
 
 
 def mbox_ingest(spark, sf_dir: str):

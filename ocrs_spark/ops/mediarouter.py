@@ -28,12 +28,11 @@ from typing import Iterator
 
 import pandas as pd
 
-from . import load_tables
+from . import derived_table
 from ..codec import sniff_format
-from ..matcache import materialize_once
 from .audio import _rate, _samples, decode_wav, encode_wav
 from .imagemeta import _png_with_text, extract_png_text
-from .video import _usec_per_frame, decode_avi, encode_avi
+from .video import decode_avi, encode_avi
 
 ROUTER_SCHEMA = (
     "doc_id bigint, media_kind string, width int, height int, "
@@ -84,21 +83,10 @@ def _route_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def _mixed_payloads(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids = pdf["doc_id"].tolist()
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [_payload(d) for d in ids]}
-                )
-
-        return docs.select("doc_id").mapInPandas(
-            gen, schema="doc_id bigint, payload binary"
-        )
-
-    return materialize_once(spark, sf_dir, "mixed_media_payloads", build)
+    return derived_table(
+        spark, sf_dir, "mixed_media_payloads", ("doc_id",),
+        "doc_id bigint, payload binary", _payload,
+    )
 
 
 def media_route_meta(spark, sf_dir: str):

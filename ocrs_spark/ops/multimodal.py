@@ -24,11 +24,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import functions as F
-
-from . import load_tables
+from . import derived_table
 from ..codec import decode_image, encode_png, encode_rawi
-from ..matcache import materialize_once
 
 META_SCHEMA = (
     "doc_id bigint, fmt string, width int, height int, channels int, "
@@ -37,8 +34,6 @@ META_SCHEMA = (
 )
 
 PAYLOAD_SCHEMA = "doc_id bigint, fmt string, payload binary"
-
-FRAME_SCHEMA = "doc_id bigint, n_frames int, sampled string"
 
 _FMTS = ("rawi", "png", "webp")
 
@@ -52,50 +47,32 @@ def _synth_dims(doc_id: int, n_chars: int) -> tuple[int, int, int, int]:
     return width, height, channels, fill
 
 
-def _synth_payload(doc_id: int, n_chars: int) -> tuple[bytes, str]:
-    """Encode the synthetic image in a per-doc container format. All
-    three are lossless, so decode(payload) == the flat source exactly."""
+def _synth_payload(doc_id: int, n_chars: int) -> tuple[str, bytes]:
+    """(fmt, payload): the synthetic image in a per-doc container
+    format. All three are lossless, so decode(payload) == the flat
+    source exactly."""
     w, h, c, fill = _synth_dims(doc_id, n_chars)
     img = np.full((h, w, c), fill, dtype=np.uint8)
     fmt = _FMTS[doc_id % 3]
     if fmt == "rawi":
-        return encode_rawi(img), fmt
+        return fmt, encode_rawi(img)
     if fmt == "png":
-        return encode_png(img), fmt
+        return fmt, encode_png(img)
     from ..webp import encode_webp
 
-    return encode_webp(img), fmt
-
-
-def _synth_payload_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fixture-side encode: build each document's container payload.
-    This runs ONCE per (session, sf_dir) during materialization — a
-    real corpus arrives already encoded, so the timed decode query must
-    not pay for synthesis."""
-    for pdf in batches:
-        doc_ids, fmts, payloads = [], [], []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            payload, fmt = _synth_payload(int(doc_id), int(n_chars))
-            doc_ids.append(int(doc_id))
-            fmts.append(fmt)
-            payloads.append(payload)
-        yield pd.DataFrame({"doc_id": doc_ids, "fmt": fmts, "payload": payloads})
+    return fmt, encode_webp(img)
 
 
 def payload_table(spark, sf_dir):
     """The encoded-corpus table (doc_id, fmt, payload), landed to
     parquet once per (session, sf_dir) — the stand-in for the real
-    binary column a production corpus would already carry."""
-
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-        return (
-            docs.select("doc_id", "n_chars")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInPandas(_synth_payload_batches, schema=PAYLOAD_SCHEMA)
-        )
-
-    return materialize_once(spark, sf_dir, "mm_payloads", build)
+    binary column a production corpus would already carry. Encoding is
+    fixture work a real corpus never pays, so the timed decode query
+    reads this table instead of synthesizing."""
+    return derived_table(
+        spark, sf_dir, "mm_payloads", ("doc_id", "n_chars"), PAYLOAD_SCHEMA,
+        _synth_payload,
+    )
 
 
 def _decode_meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -165,47 +142,6 @@ FROM documents
 """
 
 
-def _frame_sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..malloc_tuning import pretouch_arena
+QUERIES = {"multimodal_decode_meta": multimodal_decode_meta}
 
-    pretouch_arena(16)
-    for pdf in batches:
-        doc_ids, n_frames_col, sampled = [], [], []
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            n_frames = doc_id % 7 + 1
-            # Sample every 2nd frame starting at 0 (stride-k frame
-            # sampling shape; frames themselves are opaque).
-            idx = list(range(0, n_frames, 2))
-            doc_ids.append(doc_id)
-            n_frames_col.append(n_frames)
-            sampled.append(",".join(str(i) for i in idx))
-        yield pd.DataFrame(
-            {"doc_id": doc_ids, "n_frames": n_frames_col, "sampled": sampled}
-        )
-
-
-def multimodal_frame_sample(spark, sf_dir):
-    """Stride-2 frame sampling plumbing over a synthetic per-doc frame
-    count (video decode itself is stubbed; see module docstring)."""
-    (docs,) = load_tables(spark, sf_dir, "documents")
-    return docs.select("doc_id").mapInPandas(_frame_sample_batches, schema=FRAME_SCHEMA)
-
-
-ORACLE_FRAME_SAMPLE = """
-SELECT doc_id,
-       (doc_id % 7 + 1)::INT AS n_frames,
-       array_to_string([i for i in range(0, (doc_id % 7 + 1)::INT, 2)], ',') AS sampled
-FROM documents
-"""
-
-
-QUERIES = {
-    "multimodal_decode_meta": multimodal_decode_meta,
-    "multimodal_frame_sample": multimodal_frame_sample,
-}
-
-ORACLES = {
-    "multimodal_decode_meta": ORACLE_DECODE_META,
-    "multimodal_frame_sample": ORACLE_FRAME_SAMPLE,
-}
+ORACLES = {"multimodal_decode_meta": ORACLE_DECODE_META}

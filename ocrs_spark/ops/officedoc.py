@@ -34,8 +34,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from . import load_tables
-from ..matcache import materialize_once
+from . import derived_table
 
 PARA_CHARS = 40  # split source text into paragraphs of ~this size
 
@@ -162,35 +161,20 @@ def extract_docx_text(buf: bytes) -> tuple[int, int, str]:
     return len(members), len(runs), "".join(_unescape(r) for r in runs)
 
 
+def _docx(text: str) -> bytes:
+    return zip_write(
+        [
+            ("[Content_Types].xml", _CONTENT_TYPES),
+            ("word/document.xml", _document_xml(text)),
+        ]
+    )
+
+
 def _docx_payloads(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "payload": [
-                            zip_write(
-                                [
-                                    ("[Content_Types].xml", _CONTENT_TYPES),
-                                    (
-                                        "word/document.xml",
-                                        _document_xml(t),
-                                    ),
-                                ]
-                            )
-                            for t in pdf["text"]
-                        ],
-                    }
-                )
-
-        return docs.select("doc_id", "text").mapInPandas(
-            gen, schema="doc_id bigint, payload binary"
-        )
-
-    return materialize_once(spark, sf_dir, "docx_payloads", build)
+    return derived_table(
+        spark, sf_dir, "docx_payloads", ("text",),
+        "doc_id bigint, payload binary", _docx,
+    )
 
 
 def docx_text_extraction(spark, sf_dir: str):

@@ -26,9 +26,10 @@ window. One shuffle total.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from . import derived_table
 
 OUTLINE_SCHEMA = "doc_id bigint, html string"
 
@@ -48,29 +49,10 @@ def _outline_html(doc_id: int) -> str:
 
 
 def _outline_corpus(spark, sf_dir: str):
-    from ..matcache import materialize_once
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-        def synth(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "html": [
-                            _outline_html(int(d)) for d in pdf["doc_id"]
-                        ],
-                    }
-                )
-
-        return (
-            docs.select("doc_id")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInPandas(synth, schema=OUTLINE_SCHEMA)
-        )
-
-    return materialize_once(spark, sf_dir, "outline_html_docs", build)
+    return derived_table(
+        spark, sf_dir, "outline_html_docs", ("doc_id",), OUTLINE_SCHEMA,
+        _outline_html,
+    )
 
 
 def heading_outline(spark, sf_dir: str):

@@ -97,11 +97,6 @@ def pq_encode(emb: DataFrame, book) -> DataFrame:
     )
 
 
-def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (emb,) = load_tables(spark, sf_dir, "embeddings")
-    return pq_encode(emb, _codebook(spark, sf_dir))
-
-
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, vec_id, adc_rank, adc_dist): ADC top-k per query over
     the PQ codes, queries = first N_QUERIES vectors."""
@@ -176,14 +171,6 @@ coded AS (
   FROM lists
 )"""
 
-ORACLE_PQ_CODES = f"""
-WITH {_CODES_CTE}
-SELECT vec_id,
-       {" || '-' || ".join(f"m{m}::VARCHAR" for m in range(M_SUB))} AS code_str,
-       {", ".join(f"m{m}::INT AS m{m}" for m in range(M_SUB))}
-FROM coded
-"""
-
 ORACLE_PQ_TOPK = f"""
 WITH {_CODES_CTE},
 qdists AS (
@@ -209,12 +196,6 @@ QUALIFY adc_rank <= {TOP_K}
 """
 
 
-QUERIES = {
-    "ann_pq_codes": ann_pq_codes,
-    "ann_pq_topk": ann_pq_topk,
-}
+QUERIES = {"ann_pq_topk": ann_pq_topk}
 
-ORACLES = {
-    "ann_pq_codes": ORACLE_PQ_CODES,
-    "ann_pq_topk": ORACLE_PQ_TOPK,
-}
+ORACLES = {"ann_pq_topk": ORACLE_PQ_TOPK}

@@ -468,21 +468,6 @@ WHERE rank <= 3
 """
 
 
-def antijoin_customers_without_orders(spark, sf_dir):
-    """LEFT ANTI JOIN — the resume-pruning primitive (checkpoint.prune)."""
-    cust, orders = load_tables(spark, sf_dir, "customer", "orders")
-    return (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-    )
-
-
-ORACLE_ANTIJOIN = """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-"""
-
-
 def events_metrics_agg(spark, sf_dir):
     """Metrics-table aggregate: per event type counts/uniques/sums."""
     (events,) = load_tables(spark, sf_dir, "events")
@@ -1150,7 +1135,6 @@ QUERIES = {
     "q9_product_profit": q9_product_profit,
     "q8_market_share": q8_market_share,
     "window_topk_orders_per_customer": window_topk_orders_per_customer,
-    "antijoin_customers_without_orders": antijoin_customers_without_orders,
     "events_metrics_agg": events_metrics_agg,
     "events_tumbling_window": events_tumbling_window,
     "explode_token_counts": explode_token_counts,
@@ -1182,7 +1166,6 @@ ORACLES = {
     "q9_product_profit": ORACLE_Q9,
     "q8_market_share": ORACLE_Q8,
     "window_topk_orders_per_customer": ORACLE_WINDOW_TOPK,
-    "antijoin_customers_without_orders": ORACLE_ANTIJOIN,
     "events_metrics_agg": ORACLE_EVENTS_METRICS,
     "events_tumbling_window": ORACLE_TUMBLING,
     "explode_token_counts": ORACLE_EXPLODE_TOKENS,

@@ -3,8 +3,7 @@ Xiao et al. 2008): find EVERY document pair whose distinct-shingle
 Jaccard clears the threshold, with a deterministic completeness
 guarantee — the exactness anchor for the probabilistic MinHash-LSH
 candidate generator (``dedup.ngram_jaccard_pairs``), the same role
-ann_topk_bruteforce plays for the banded-LSH ANN and the exact
-quantiles play for the sketches.
+ann_topk_bruteforce plays for the banded-LSH ANN.
 
 The prefix theorem: order every document's shingles by one global
 total order (document frequency ascending, shingle ascending — rarest

@@ -21,7 +21,6 @@ from . import load_tables
 
 TOP_K = 5
 N_QUERIES = 5
-LSH_PLANES = 6  # 2^6 = 64 buckets
 
 _DOT = "aggregate(zip_with(qe, ne, (x, y) -> cast(x AS double) * cast(y AS double)), cast(0 AS double), (acc, v) -> acc + v)"
 _NQ = "sqrt(aggregate(qe, cast(0 AS double), (acc, x) -> acc + cast(x AS double) * cast(x AS double)))"
@@ -94,29 +93,6 @@ def _plane_expr(dim: int, plane: int) -> str:
     )
 
 
-def lsh_bucket_col(dim: int = 64):
-    """The LSH_PLANES-bit random-hyperplane bucket id as a Column over
-    an ``embedding`` column (bit p set iff projection on plane p > 0)."""
-    bucket = None
-    for p in range(LSH_PLANES):
-        bit = F.when(F.expr(_plane_expr(dim, p)) > 0, F.lit(2 ** p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("long")
-
-
-def ann_lsh_buckets(spark, sf_dir):
-    """Random-hyperplane LSH bucketing: each vector's bucket id is the
-    sign pattern of LSH_PLANES seeded hyperplane projections. Returns
-    bucket occupancy (the candidate-generation structure); ann_topk_lsh
-    runs the full query path over these buckets."""
-    (emb,) = load_tables(spark, sf_dir, "embeddings")
-    return (
-        emb.withColumn("bucket", lsh_bucket_col())
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_vectors"), F.min("vec_id").alias("min_vec_id"))
-    )
-
-
 def _duck_plane(plane: int, dim: int = 64) -> str:
     """Same projection in DuckDB SQL, from the same inlined literals
     (hashlib md5 == Spark md5 == DuckDB md5 of the same string, so the
@@ -126,21 +102,6 @@ def _duck_plane(plane: int, dim: int = 64) -> str:
         f"list_sum(list_transform(list_zip(embedding, [{signs}]),"
         " z -> z[1]::DOUBLE * z[2]))"
     )
-
-
-_DUCK_BUCKET = (
-    "("
-    + " + ".join(
-        f"(CASE WHEN ({_duck_plane(p)}) > 0 THEN {2 ** p} ELSE 0 END)"
-        for p in range(LSH_PLANES)
-    )
-    + ")::BIGINT"
-)
-
-ORACLE_ANN_LSH = (
-    "SELECT bucket, count(*) AS n_vectors, min(vec_id) AS min_vec_id FROM "
-    f"(SELECT vec_id, {_DUCK_BUCKET} AS bucket FROM embeddings) GROUP BY bucket"
-)
 
 
 # Banded random-hyperplane LSH: B bands of R planes; two vectors are
@@ -157,7 +118,7 @@ ORACLE_ANN_LSH = (
 #   candidate rate, recall >= 0.93 at cos 0.9 (a real near-dup bar).
 ANN_BANDS_B = 8
 ANN_BAND_ROWS = 2
-ANN_BAND_PLANE_BASE = 100  # seed namespace disjoint from ann planes 0..5
+ANN_BAND_PLANE_BASE = 100  # seed namespace of the ANN band planes
 EMB_DIM = 64
 
 
@@ -275,6 +236,38 @@ def duck_banded_buckets(
 
 
 DUCK_BANDED_BUCKETS = duck_banded_buckets()
+
+
+def bucket_pairs(keyed, keys, id_col: str, names, carry=None, keep=()):
+    """Distinct id pairs that share a bucket, without a self-join.
+
+    ``keyed`` is grouped on the bucket ``keys``; each bucket's sorted
+    (``id_col``[, ``carry``]) structs explode into every pair a < b,
+    so the subtree that computed the buckets runs once. ``names`` label
+    the pair columns: (a, b), or (a, b, carry_a, carry_b) with
+    ``carry``. ``keep`` names bucket keys to keep ahead of the pair
+    (pairs stay distinct per kept key). Fan-out per bucket is quadratic
+    in its occupancy, the same bound a bucket self-join has."""
+    fields = [id_col] + ([carry] if carry else [])
+    sides = [(side, f) for f in fields for side in ("a", "b")]
+    pair = ", ".join(f"'{n}', {side}.{f}" for n, (side, f) in zip(names, sides))
+    return (
+        keyed.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(F.struct(*fields))).alias("ms"))
+        .filter(F.size("ms") > 1)
+        .select(
+            *keep,
+            F.explode(
+                F.expr(
+                    "flatten(transform(ms, (a, i) -> transform("
+                    "slice(ms, i + 2, size(ms)), "
+                    f"b -> named_struct({pair}))))"
+                )
+            ).alias("p"),
+        )
+        .select(*keep, "p.*")
+        .distinct()
+    )
 
 
 def _ann_topk_lsh_plan(spark, sf_dir):
@@ -659,7 +652,6 @@ ORACLE_ANN_RECALL = _recall_oracle()
 
 QUERIES = {
     "ann_topk_bruteforce": ann_topk_bruteforce,
-    "ann_lsh_buckets": ann_lsh_buckets,
     "ann_topk_lsh": ann_topk_lsh,
     "ann_ivf_topk": ann_ivf_topk,
     "ann_recall": ann_recall,
@@ -672,7 +664,6 @@ QUERIES = {
 
 ORACLES = {
     "ann_topk_bruteforce": ORACLE_ANN_BRUTE,
-    "ann_lsh_buckets": ORACLE_ANN_LSH,
     "ann_topk_lsh": ORACLE_ANN_LSH_TOPK,
     "ann_ivf_topk": ORACLE_ANN_IVF,
     "ann_recall": ORACLE_ANN_RECALL,

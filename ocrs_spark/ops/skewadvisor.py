@@ -10,9 +10,9 @@ pass the real job would pay), then O(distinct) reductions —
 - top_share: the hottest key's fraction of all rows (the straggler's
   task share under hash partitioning);
 - p99_over_mean: exact continuous-interpolation p99 of the per-key
-  counts over their mean (heavy-tail shape, pinned to the same
-  (n-1)*p convention as ops/quantiles.py so DuckDB's quantile_cont
-  agrees bit-for-bit);
+  counts over their mean (heavy-tail shape; linear interpolation at
+  rank (n-1)*p, Spark's ``percentile`` convention, so DuckDB's
+  quantile_cont agrees bit-for-bit);
 - salt_factor: ceil(top_count * PARTS / total) — the number of salt
   shards that caps the hottest key's per-task share at ~1/PARTS of the
   data, i.e. what skew.salted_agg's constant should be for this key

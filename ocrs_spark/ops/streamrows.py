@@ -9,14 +9,11 @@ streaming operators end-to-end instead of pytest-only:
   sessionizer (ocrs_spark.streaming; SURVEY.md §2.6). Oracle = batch
   sessionization restricted to closed sessions (every session except
   each user's trailing one, which stays open in streaming state).
-- ``stream_tumbling_agg``: the watermarked tumbling-window aggregation.
-  Oracle = the batch ORACLE_TUMBLING (availableNow drains everything,
-  so no window is dropped by the watermark).
 """
 
 from __future__ import annotations
 
-from .relational import ORACLE_TUMBLING, SESSIONS_CTE
+from .relational import SESSIONS_CTE
 
 # (applicationId, sf_dir, kind) -> memory-sink table name of a run.
 _DONE: dict = {}
@@ -87,19 +84,6 @@ def stream_sessionize_closed(spark, sf_dir):
         sf_dir,
         "closed_sessions",
         lambda ev, ck, name: stream_sessionize_events(spark, ev, ck, name),
-    )
-
-
-def stream_tumbling_agg(spark, sf_dir):
-    """Hourly windowed counts/sums emitted by the watermarked streaming
-    aggregation (window_start, event_type, n_events, sum_value)."""
-    from ocrs_spark.streaming import stream_events_tumbling
-
-    return _staged_events_run(
-        spark,
-        sf_dir,
-        "stream_tumbling",
-        lambda ev, ck, name: stream_events_tumbling(spark, ev, ck, name),
     )
 
 
@@ -314,7 +298,6 @@ QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n_events) = 1
 
 QUERIES = {
     "stream_sessionize_closed": stream_sessionize_closed,
-    "stream_tumbling_agg": stream_tumbling_agg,
     "stream_dedup_ingest": stream_dedup_ingest,
     "stream_click_attribution": stream_click_attribution,
     "stream_value_alerts": stream_value_alerts,
@@ -324,7 +307,6 @@ QUERIES = {
 
 ORACLES = {
     "stream_sessionize_closed": ORACLE_STREAM_SESSIONIZE,
-    "stream_tumbling_agg": ORACLE_TUMBLING,
     # The staged re-deliveries all arrive inside the watermark horizon,
     # so the drained dedup output is exactly the original distinct set.
     "stream_dedup_ingest": (

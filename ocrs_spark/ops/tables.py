@@ -26,8 +26,9 @@ data tables.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
+
+from . import derived_table
 
 TABLE_SCHEMA = "doc_id bigint, html string"
 
@@ -53,27 +54,10 @@ def _table_html(doc_id: int) -> str:
 
 
 def _table_corpus(spark, sf_dir: str):
-    from ..matcache import materialize_once
-
-    def build():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-        def synth(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "html": [_table_html(int(d)) for d in pdf["doc_id"]],
-                    }
-                )
-
-        return (
-            docs.select("doc_id")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInPandas(synth, schema=TABLE_SCHEMA)
-        )
-
-    return materialize_once(spark, sf_dir, "table_html_docs", build)
+    return derived_table(
+        spark, sf_dir, "table_html_docs", ("doc_id",), TABLE_SCHEMA,
+        _table_html,
+    )
 
 
 def html_table_cells(spark, sf_dir: str):

@@ -96,81 +96,6 @@ def asof_join(
     return carried.filter(F.col("__side") == 1).select(*out_cols)
 
 
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_time: str,
-    right_time: str,
-    value_cols: list[str],
-    prefix: str = "asof_",
-    tiebreak: str | None = None,
-    bucket: str = "WEEK",
-) -> DataFrame:
-    """Skew-bounded as-of join, same semantics as ``asof_join``.
-
-    ``asof_join`` sorts each key group in one task, so a hot key (one
-    user with 10^9 events) serializes. This variant shuffles on
-    (key, time-bucket) instead — the hot key's rows spread across its
-    buckets — then repairs bucket boundaries with a carry-in table of
-    one row per (key, bucket): the latest right row STRICTLY BEFORE
-    each bucket, computed from per-bucket maxima (``max_by``, map-side
-    combinable) and a running window over the compact bucket list. The
-    final coalesce prefers the within-bucket match. Cost: the big
-    shuffle is now skew-free; the repair path touches only
-    O(keys x buckets) rows and its join reuses the (key, bucket)
-    partitioning the aggregation already produced.
-    """
-    b_of = lambda c: F.date_trunc(bucket, F.col(c))  # noqa: E731
-    payload = F.struct(*[F.col(c) for c in value_cols]).alias("__asof")
-    tb = (F.col(tiebreak) if tiebreak else F.lit(0)).alias("__tb")
-    r = right.select(
-        *on, F.col(right_time).alias("__t"), b_of(right_time).alias("__b"),
-        tb, F.lit(0).alias("__side"), payload,
-    )
-    l = left.select(
-        *left.columns,
-        F.col(left_time).alias("__t"),
-        b_of(left_time).alias("__b"),
-        F.lit(1).alias("__side"),
-    )
-    u = l.unionByName(r, allowMissingColumns=True)
-    w_local = (
-        Window.partitionBy(*on, "__b")
-        .orderBy(F.col("__t").asc(), F.col("__side").asc(), F.col("__tb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = u.withColumn("__m", F.last("__asof", ignorenulls=True).over(w_local))
-
-    # Latest right row per (key, bucket): lexicographic max on (t, tb).
-    per_bucket = r.groupBy(*on, "__b").agg(
-        F.max_by("__asof", F.struct("__t", "__tb")).alias("__last")
-    )
-    # Every bucket either side touches, so left-only buckets inherit the
-    # carry too; the running frame stops at -1 = strictly-earlier buckets.
-    buckets = (
-        l.select(*on, "__b").unionByName(r.select(*on, "__b")).distinct()
-    )
-    w_carry = (
-        Window.partitionBy(*on)
-        .orderBy(F.col("__b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        buckets.join(per_bucket, [*on, "__b"], "left")
-        .withColumn("__carry", F.last("__last", ignorenulls=True).over(w_carry))
-        .select(*on, "__b", "__carry")
-    )
-    fixed = (
-        local.filter(F.col("__side") == 1)
-        .join(carry, [*on, "__b"], "left")
-        .withColumn("__m", F.coalesce("__m", "__carry"))
-    )
-    out_cols: list[Column] = [F.col(c) for c in left.columns]
-    out_cols += [F.col(f"__m.{c}").alias(f"{prefix}{c}") for c in value_cols]
-    return fixed.select(*out_cols)
-
-
 def asof_latest_view_per_purchase(spark, sf_dir: str) -> DataFrame:
     """(purchase_id, user_id, purchase_ts, prior_view_id, prior_view_ts):
     for every purchase event, the same user's most recent 'view' at or
@@ -196,43 +121,6 @@ def asof_latest_view_per_purchase(spark, sf_dir: str) -> DataFrame:
         value_cols=["view_id", "view_ts"],
         prefix="prior_",
         tiebreak="view_id",
-    )
-    return joined.select(
-        "purchase_id",
-        "user_id",
-        "purchase_ts",
-        F.coalesce("prior_view_id", F.lit(_NO_PRIOR_ID)).alias("prior_view_id"),
-        F.coalesce(
-            "prior_view_ts", F.expr(f"timestamp_ntz'{_NO_PRIOR_TS}'")
-        ).alias("prior_view_ts"),
-    )
-
-
-def asof_latest_view_per_purchase_bucketed(spark, sf_dir: str) -> DataFrame:
-    """The same attribution as-of through the skew-bounded day-bucketed
-    path — same oracle as ``asof_prior_view``, so the repair logic is
-    hash-pinned against the plain merge every round."""
-    (events,) = load_tables(spark, sf_dir, "events")
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    views = events.filter(F.col("event_type") == "view").select(
-        "user_id",
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    joined = asof_join_bucketed(
-        purchases,
-        views,
-        on=["user_id"],
-        left_time="purchase_ts",
-        right_time="view_ts",
-        value_cols=["view_id", "view_ts"],
-        prefix="prior_",
-        tiebreak="view_id",
-        bucket="DAY",
     )
     return joined.select(
         "purchase_id",
@@ -360,14 +248,10 @@ GROUP BY 1
 
 QUERIES = {
     "asof_prior_view": asof_latest_view_per_purchase,
-    "asof_prior_view_bucketed": asof_latest_view_per_purchase_bucketed,
     "range_join_campaigns": range_join_campaign_attribution,
 }
 
 ORACLES = {
     "asof_prior_view": ORACLE_ASOF_PRIOR_VIEW,
-    # identical oracle by design: the skew-bounded path must reproduce
-    # the plain merge bit-for-bit
-    "asof_prior_view_bucketed": ORACLE_ASOF_PRIOR_VIEW,
     "range_join_campaigns": ORACLE_RANGE_CAMPAIGNS,
 }

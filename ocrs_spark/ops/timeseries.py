@@ -14,9 +14,8 @@
   type. NTILE is ORDER-BY-ROW assignment, so ties at a bucket boundary
   are engine-dependent unless the sort is total — (value, event_id)
   pins it. This is the EXACT-decile operator (one global sort per
-  type, the true NTILE cost); the sketch path for corpus-scale
-  percentiles is ops/quantiles.py, and this row is its exact
-  counterpart the same way ann_topk_bruteforce anchors the ANN family.
+  type, the true NTILE cost); corpus-scale percentiles would use
+  ``approx_percentile``'s mergeable sketch instead.
 """
 
 from __future__ import annotations

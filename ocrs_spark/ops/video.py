@@ -40,8 +40,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from . import load_tables
-from ..matcache import materialize_once
+from . import derived_table
 
 FILL_A = 31
 FILL_B = 7
@@ -169,21 +168,10 @@ def decode_avi(buf: bytes):
 
 
 def _avi_payloads(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids = pdf["doc_id"].tolist()
-                yield pd.DataFrame(
-                    {"doc_id": ids, "payload": [encode_avi(d) for d in ids]}
-                )
-
-        return docs.select("doc_id").mapInPandas(
-            gen, schema="doc_id bigint, payload binary"
-        )
-
-    return materialize_once(spark, sf_dir, "avi_payloads", build)
+    return derived_table(
+        spark, sf_dir, "avi_payloads", ("doc_id",),
+        "doc_id bigint, payload binary", encode_avi,
+    )
 
 
 def video_avi_features(spark, sf_dir: str):

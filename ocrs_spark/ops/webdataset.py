@@ -24,13 +24,11 @@ once-materialized payload column.
 
 from __future__ import annotations
 
-import struct
 from typing import Iterator
 
 import pandas as pd
 
-from . import load_tables
-from ..matcache import materialize_once
+from . import derived_table
 
 BLOCK = 512
 
@@ -95,26 +93,10 @@ def parse_tar(buf: bytes):
 
 
 def _shard_payloads(spark, sf_dir: str):
-    def build():
-        (docs,) = load_tables(spark, sf_dir, "documents")
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "payload": [
-                            _shard(int(d), t)
-                            for d, t in zip(pdf["doc_id"], pdf["text"])
-                        ],
-                    }
-                )
-
-        return docs.select("doc_id", "text").mapInPandas(
-            gen, schema="doc_id bigint, payload binary"
-        )
-
-    return materialize_once(spark, sf_dir, "wds_shards", build)
+    return derived_table(
+        spark, sf_dir, "wds_shards", ("doc_id", "text"),
+        "doc_id bigint, payload binary", _shard,
+    )
 
 
 def webdataset_ingest(spark, sf_dir: str):

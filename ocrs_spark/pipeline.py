@@ -234,11 +234,15 @@ def _parse_byte_size(value: str) -> int | None:
 
 
 # Broadcast decisions memoized per (application, analyzed-plan semantic
-# hash, threshold): one size aggregate per distinct media table/snapshot
-# per session instead of one per pipeline invocation. Values are single
-# booleans (bounded); a snapshot change produces a different analyzed
-# plan, hence a fresh entry. This caches a PLANNING decision, never
-# query results.
+# hash, threshold): one size aggregate per distinct media plan per
+# session instead of one per pipeline invocation. Values are single
+# booleans (bounded). This caches a PLANNING decision, never query
+# results. Staleness window: for a file scan such as
+# ``spark.read.parquet(path)`` the semantic hash follows the path (the
+# file index compares root paths), not the files under it, so a media
+# table rewritten in place under the same path keeps its first verdict
+# for the life of the session. A table written under a new path, or a
+# media plan with a different filter or projection, gets a fresh entry.
 # Both this cache and the counter below are read and updated without a
 # lock: they assume a single driver thread builds pipelines. Concurrent
 # driver threads may each run the size aggregate once and interleave

@@ -1,10 +1,10 @@
 """Structured Streaming surfaces.
 
-Two shapes (SURVEY.md §2.6 / task mandate):
-- ``stream_events_tumbling``: windowed aggregation with watermarked
-  event-time over the events table read as a stream (the canonical
-  readStream -> window agg -> sink pipeline; batch-equivalent oracle is
-  ORACLE_TUMBLING in ops.relational);
+Two shapes (SURVEY.md §2.6):
+- ``stream_tumbling_late`` / ``stream_tumbling_update``: windowed
+  aggregation with watermarked event-time over the events table read
+  as a stream (the canonical readStream -> window agg -> sink
+  pipeline);
 - ``stream_ocr_documents``: incremental OCR — new document files landing
   in a directory are exploded, OCR'd and woven via ``foreachBatch``
   reusing the exact batch pipeline, with checkpointed exactly-once sink
@@ -17,43 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import ocr_documents
-
-
-def stream_events_tumbling(
-    spark: SparkSession, events_path: str, checkpoint_dir: str, out_table: str
-) -> None:
-    """Run the hourly windowed count as an availableNow stream into an
-    in-memory sink named ``out_table``. Watermark bounds state for true
-    continuous runs; availableNow drains the backlog and stops."""
-    schema = spark.read.parquet(events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_path)
-        # Watermarks require a zoned TIMESTAMP (EVENT_TIME_IS_NOT_ON_
-        # TIMESTAMP_TYPE on ntz), so the ntz wall time is cast here.
-        # get_spark pins spark.sql.session.timeZone=UTC, which makes the
-        # cast wall-time-preserving and the emitted epochs identical to
-        # the tz-independent batch query (ops.relational) and its oracle.
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_tumbling_late(
@@ -84,8 +47,11 @@ def stream_tumbling_late(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(events_path)
-        # zoned timestamp required for watermarks; UTC session tz makes
-        # the cast wall-time-preserving (see stream_events_tumbling).
+        # Watermarks require a zoned TIMESTAMP (EVENT_TIME_IS_NOT_ON_
+        # TIMESTAMP_TYPE on ntz), so the ntz wall time is cast here.
+        # get_spark pins spark.sql.session.timeZone=UTC, which makes the
+        # cast wall-time-preserving and the emitted epochs identical to
+        # the tz-independent batch query (ops.relational) and its oracle.
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -207,7 +173,7 @@ def stream_dedup_events(
         spark.readStream.schema(schema)
         .parquet(events_path)
         # zoned timestamp required for watermarks; UTC session tz makes
-        # the cast wall-time-preserving (see stream_events_tumbling).
+        # the cast wall-time-preserving (see stream_tumbling_late).
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -246,13 +212,12 @@ def stream_view_click_join(
     passes view_ts + window), so join state is O(events per horizon)
     instead of unbounded. availableNow drains the staged corpus —
     typically in one micro-batch, so nothing is dropped by the
-    watermark and the batch range-join oracle is exact (the same
-    argument stream_events_tumbling relies on).
+    watermark and the batch range-join oracle is exact.
 
     Both sides read the SAME file source (a stream self-join); output
     keys are the two event ids, so rows stay unique even where epoch
     truncation collides. UTC session tz makes the zoned cast
-    wall-time-preserving (see stream_events_tumbling).
+    wall-time-preserving (see stream_tumbling_late).
 
     ``max_files_per_trigger`` splits the drain into several
     micro-batches (tests use it to prove cross-batch join state +
@@ -359,9 +324,7 @@ def stream_value_alerts(
     event where the user's cumulative value crosses the threshold —
     the monitoring-rule shape (budget caps, abuse limits) that needs
     arbitrary cross-batch state, not a windowed aggregate. Runs on
-    ``applyInPandasWithState``; ``stream_value_alerts_tws`` is the
-    transformWithStateInPandas twin (gated: the TWS state-server
-    protocol needs google.protobuf, absent in this sandbox).
+    ``applyInPandasWithState``.
 
     ``max_files_per_trigger`` splits the drain into micro-batches so
     tests can prove the running total and the fired latch survive in
@@ -401,125 +364,6 @@ def stream_value_alerts(
     else:
         q = writer.format("memory").queryName(out_table).start()
     q.awaitTermination()
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas drives its Python-side state server
-    over protobuf; without the package the runner crashes at init."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_value_alerts_tws(
-    spark: SparkSession, events_dir: str, checkpoint_dir: str, out_table: str
-) -> None:
-    """The same alert operator on Spark 4's transformWithStateInPandas
-    (typed per-state-variable API + RocksDB state store) — committed
-    import-gated like the ONNX harness: tests assert equality with the
-    applyInPandasWithState leg whenever google.protobuf exists."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_type = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("alert_epoch", LongType()),
-            StructField("cum_cents", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("cum_cents", LongType()),
-            StructField("n_events", LongType()),
-            StructField("fired", BooleanType()),
-        ]
-    )
-
-    class AlertProcessor(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("totals", state_type)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
-            ev = pd.concat(list(rows)).sort_values(["ts_epoch", "event_id"])
-            if self._state.exists():
-                cum, n, fired = self._state.get()
-                cum, n, fired = int(cum), int(n), bool(fired)
-            else:
-                cum, n, fired = 0, 0, False
-            out = []
-            cents = np.floor(ev["value"].to_numpy(np.float64) * 100).astype(
-                np.int64
-            )
-            for es, c in zip(ev["ts_epoch"].to_numpy(np.int64), cents):
-                cum += int(c)
-                n += 1
-                if not fired and cum >= ALERT_THRESHOLD_CENTS:
-                    fired = True
-                    out.append((key[0], int(es), cum, n))
-            self._state.update((cum, n, fired))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=["user_id", "alert_epoch", "cum_cents", "n_events"],
-                )
-
-        def close(self):
-            pass
-
-    # TWS requires the RocksDB state store; scope the provider switch
-    # to this query and restore the session's default afterwards.
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
-        .withColumn(
-            "ts_epoch",
-            F.expr("timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"),
-        )
-        .select("user_id", "event_id", "ts_epoch", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            AlertProcessor(),
-            outputStructType=out_type,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
 
 
 SESSION_GAP_SEC = 30 * 60

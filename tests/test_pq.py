@@ -12,16 +12,18 @@ from ocrs_spark.ops.pq import (
     M_SUB,
     N_QUERIES,
     TOP_K,
-    ann_pq_codes,
+    _codebook,
     ann_pq_topk,
+    pq_encode,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_codes_are_in_range_and_total(spark):
-    codes = ann_pq_codes(spark, SF)
-    n = spark.read.parquet(f"{SF}/embeddings.parquet").count()
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    codes = pq_encode(emb, _codebook(spark, SF))
+    n = emb.count()
     assert codes.count() == n
     for m in range(M_SUB):
         mn, mx = codes.agg(F.min(f"m{m}"), F.max(f"m{m}")).collect()[0]

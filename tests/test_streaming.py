@@ -1,4 +1,4 @@
-"""Structured Streaming tests: windowed agg equals the batch oracle;
+"""Structured Streaming tests: stream outputs equal their batch oracles;
 incremental foreachBatch OCR is exactly-once across restarts."""
 
 import duckdb
@@ -6,32 +6,14 @@ import duckdb
 from pyspark.sql import functions as F
 
 from ocrs_spark.fixtures import corpus_to_spark, generate_corpus
-from ocrs_spark.ops.relational import ORACLE_TUMBLING, events_sessionize
+from ocrs_spark.ops.relational import events_sessionize
 from ocrs_spark.streaming import (
-    stream_events_tumbling,
     stream_ocr_documents,
     stream_ocr_to_iceberg,
     stream_sessionize_events,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_stream_tumbling_matches_batch_oracle(spark, tmp_path):
-    # The file stream source requires a directory; stage the table.
-    events_dir = str(tmp_path / "events")
-    spark.read.parquet(f"{SF_DIR}/events.parquet").write.parquet(events_dir)
-    stream_events_tumbling(
-        spark,
-        events_dir,
-        str(tmp_path / "ckpt"),
-        "stream_tumbling_out",
-    )
-    got = sorted(tuple(r) for r in spark.table("stream_tumbling_out").collect())
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
-    want = sorted(tuple(r) for r in con.sql(ORACLE_TUMBLING).fetchall())
-    assert got == want
 
 
 def test_stream_sessionize_matches_batch_closed_sessions(spark, tmp_path):
@@ -463,25 +445,6 @@ def test_stream_value_alerts_state_survives_batches_and_restart(spark, tmp_path)
     n_batches = len(os.listdir(os.path.join(ckpt, "offsets")))
     assert n_batches >= 3  # the drain genuinely split
     got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
-    assert got == _oracle_value_alerts()
-
-
-def test_stream_value_alerts_tws_twin_matches(spark, tmp_path):
-    """transformWithStateInPandas twin produces the identical alert set
-    — runs only where google.protobuf exists (TWS drives its Python
-    state server over protobuf; absent in this sandbox)."""
-    import pytest
-
-    from ocrs_spark.streaming import stream_value_alerts_tws, tws_available
-
-    if not tws_available():
-        pytest.skip("google.protobuf not installed; TWS runner unavailable")
-    events_dir = str(tmp_path / "events")
-    spark.read.parquet(f"{SF_DIR}/events.parquet").write.parquet(events_dir)
-    stream_value_alerts_tws(
-        spark, events_dir, str(tmp_path / "ckpt"), "alerts_tws_out"
-    )
-    got = sorted(tuple(r) for r in spark.table("alerts_tws_out").collect())
     assert got == _oracle_value_alerts()
 
 

@@ -11,9 +11,6 @@ from pyspark.sql import functions as F
 
 from ocrs_spark.ops.temporal import (
     asof_join,
-    asof_join_bucketed,
-    asof_latest_view_per_purchase,
-    asof_latest_view_per_purchase_bucketed,
     range_join_buckets,
     range_join_campaign_attribution,
 )
@@ -84,32 +81,6 @@ def test_asof_join_plan_is_one_shuffle_no_join(spark):
     assert "Join" not in plan  # merge via union+window, never a join node
     assert plan.count("Exchange") == 1  # ONE hash shuffle on the key
     assert "Window" in plan
-
-
-def test_asof_join_bucketed_matches_plain_on_fixture(spark):
-    """The fixture forces every repair case: a match in the same day
-    bucket, a match carried from an earlier bucket (lid=10's latest
-    prior is two days back), a key with right rows only after the left
-    row, and a key with no right rows at all."""
-    kwargs = dict(
-        on=["k"], left_time="lt", right_time="rt",
-        value_cols=["rid", "rt"], prefix="m_", tiebreak="rid",
-    )
-    plain = asof_join(_left(spark), _right(spark), **kwargs)
-    bucketed = asof_join_bucketed(
-        _left(spark), _right(spark), bucket="DAY", **kwargs
-    )
-    key = lambda r: (r.lid, r.m_rid, r.m_rt)  # noqa: E731
-    assert sorted(map(key, plain.collect())) == sorted(
-        map(key, bucketed.collect())
-    )
-
-
-def test_asof_bucketed_query_matches_plain_on_events(spark):
-    sf = "/root/testdata/sf0.001"
-    a = asof_latest_view_per_purchase(spark, sf).collect()
-    b = asof_latest_view_per_purchase_bucketed(spark, sf).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_range_join_exactly_once_across_multiday_window(spark):
